@@ -1348,11 +1348,23 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     stop = threading.Event()
 
-    # SIGINT → graceful stop (ctxutil/background_signals.go:12-22 parity)
+    # SIGINT → graceful stop (ctxutil/background_signals.go:12-22
+    # parity); the previous handlers come back before main() returns,
+    # so an in-process caller (tests, an embedding host) keeps its own
+    prev = {}
     if threading.current_thread() is threading.main_thread():
-        signal.signal(signal.SIGINT, lambda *_: stop.set())
-        signal.signal(signal.SIGTERM, lambda *_: stop.set())
+        for sig in (signal.SIGINT, signal.SIGTERM):
+            prev[sig] = signal.signal(sig, lambda *_: stop.set())
+    try:
+        return _dispatch(args, stop)
+    finally:
+        for sig, handler in prev.items():
+            # None: the old handler was not installed from Python
+            signal.signal(sig, signal.SIG_DFL if handler is None
+                          else handler)
 
+
+def _dispatch(args: argparse.Namespace, stop: threading.Event) -> int:
     if args.parallel_read is not None and (
         not args.connect.startswith("postgres:")
         or args.transport != "outbox"

@@ -198,7 +198,8 @@ def curate(docs, near_dedup: bool = False, min_clf: float = 0.0,
     if semantic_dedup:
         # within-input SemDeDup (round 13, VERDICT r12 #2; re-routed
         # round 14, VERDICT r13 what's-wrong #1): the CLI runs the
-        # certified `_semdedup_spark_df` chain itself — auto-k
+        # certified `_semdedup_spark_df` chain itself at nprobe=1 (no
+        # second-cell membership is assigned or scanned) — auto-k
         # codebook (k ∝ n), narrow integer-argmax cells, the
         # SEMDEDUP_CELL_HARD_CAP mega-cell guard, skew-chunked tiled
         # BLAS GEMM within cells, exact-integer verification, and the
@@ -216,7 +217,8 @@ def curate(docs, near_dedup: bool = False, min_clf: float = 0.0,
         vtrain = f"_curate_sem_{_uuid.uuid4().hex[:8]}"
         sq.createOrReplaceTempView(vtrain)
         try:
-            hits = _semdedup_spark_df(sess, vtrain).selectExpr(
+            np1, _ = _semdedup_spark_df(sess, vtrain)  # nprobe=1
+            hits = np1.selectExpr(
                 "id_a AS doc_id", "id_b AS sem_dup_of"
             ).localCheckpoint(eager=True)  # materialized before the
             # temp view (still referenced by the lazy plan) drops

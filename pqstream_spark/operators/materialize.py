@@ -188,108 +188,3 @@ def materialize_current_state_stream(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-
-def materialize_current_state_tws(
-    changelog: DataFrame, tombstone_ttl_ms: int = 24 * 3600 * 1000
-) -> DataFrame:
-    """The same streaming fold on Spark 4's transformWithStateInPandas —
-    the successor API to applyInPandasWithState, with typed named state
-    and NATIVE per-state TTL (no hand-rolled timers).
-
-    Two value states per key express the tombstone design directly:
-    - `live` (no TTL): (seq, payload_json) of the current row; lives as
-      long as the key does.
-    - `tomb` (ttl = tombstone_ttl_ms): the DELETE's seq high-water.
-      TTL cleanup is passive state-store maintenance — unlike a
-      processing-time timeout it schedules no timer-driven empty
-      micro-batches, so an idle query stays idle.
-
-    The replay guard (`seq <= high-water skips`) reads whichever state
-    exists; a DELETE moves the key live→tomb, a later INSERT moves it
-    tomb→live. Emission contract matches
-    materialize_current_state_stream (update-mode, one row per touched
-    key per micro-batch).
-
-    ENVIRONMENT GATE: the TWS state-server protocol needs the
-    `protobuf` package (pyspark's StateMessage_pb2), which this
-    container lacks — same constraint as grpcio (streaming/sinks.py).
-    The applyInPandasWithState form above is the executable path here;
-    this one runs wherever protobuf is installed."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError as e:
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package "
-            "(pyspark StateMessage_pb2); not installed in this "
-            "environment — use materialize_current_state_stream"
-        ) from e
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class CurrentState(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._live = handle.getValueState(
-                "live", "seq long, op string, payload_json string"
-            )
-            self._tomb = handle.getValueState(
-                "tomb", "seq long", ttlDurationMs=tombstone_ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            table_name, id_ = key[0], key[1]  # key[2] is is_trunc
-            if self._live.exists():
-                seq, op, payload = self._live.get()
-            elif self._tomb.exists():
-                # key[2] (is_trunc) tells which tombstone kind this key
-                # holds — restore the right op label for replay batches
-                (seq,), payload = self._tomb.get(), None
-                op = "TRUNCATE" if key[2] else "DELETE"
-            else:
-                seq, op, payload = -1, None, None
-            for pdf in rows:
-                pdf = pdf.sort_values("seq")
-                for row in pdf.itertuples(index=False):
-                    if row.seq <= seq:
-                        continue  # replayed / out-of-order older event
-                    seq = int(row.seq)
-                    op = row.op
-                    payload = (
-                        None
-                        if row.op in ("DELETE", "TRUNCATE")
-                        else row.payload_json
-                    )
-            # ADVICE r8 (low): TRUNCATE is a tombstone like DELETE — it
-            # must live in the TTL'd state so the table-level marker
-            # expires on the same timeout as row tombstones (parity with
-            # materialize_current_state_stream's timer-based expiry).
-            if op in ("DELETE", "TRUNCATE"):
-                self._tomb.update((seq,))
-                self._live.clear()
-            else:
-                self._live.update((seq, op, payload))
-                self._tomb.clear()
-            yield pd.DataFrame(
-                {
-                    "table_name": [table_name],
-                    "id": [id_],
-                    "seq": [seq],
-                    "op": [op],
-                    "payload_json": [payload],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        changelog.select(
-            "table_name", "id", "seq", "op", "payload_json",
-            (F.col("op") == "TRUNCATE").alias("is_trunc"),
-        )
-        .groupBy("table_name", "id", "is_trunc")
-        .transformWithStateInPandas(
-            CurrentState(),
-            outputStructType=CURRENT_STATE_SCHEMA,
-            outputMode="Update",
-            timeMode="ProcessingTime",  # required for state TTL; no timers registered
-        )
-    )

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import scoped_conf
 from ..sources.tables import register_views
 
 
@@ -54,38 +55,14 @@ from ..sources.tables import register_views
 # restored. What the checkpointed SUBTREES give up is AQE partition
 # coalescing / skew-join splitting inside themselves — acceptable for
 # these bounded derived relations (their heavy fan-out is explicitly
-# chunk-managed), and deployments that want AQE inside builder
-# subtrees can set SPARK_GRAFT_BUILD_AQE=true.
+# chunk-managed).
 #
 # NOT thread-safe vs concurrent queries on the same session (the conf
 # is session-wide): the catalog builders run on the caller's thread
 # only, which is how bench.py and the driver invoke them.
 
 def _no_aqe_during_build(spark: SparkSession):
-    import contextlib
-    import os as _os
-
-    @contextlib.contextmanager
-    def _cm():
-        if _os.environ.get("SPARK_GRAFT_BUILD_AQE", "").strip().lower() \
-                in ("1", "true", "yes", "on"):
-            yield
-            return
-        key = "spark.sql.adaptive.enabled"
-        try:
-            prev = spark.conf.get(key)
-        except Exception:
-            prev = None
-        spark.conf.set(key, "false")
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    return _cm()
+    return scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"})
 
 
 def _aqe_scoped_builder(fn):
@@ -636,7 +613,7 @@ def _dedup_corpus_impl(corpus: DataFrame) -> DataFrame:
     CC-round joins keep their explicit broadcast hints (the static
     planner honors them); what the rounds give up is AQE skew-splitting
     of the Jaccard-verify join, whose skew is already bounded by
-    LSH_BUCKET_CAP. SPARK_GRAFT_BUILD_AQE=true restores AQE here."""
+    LSH_BUCKET_CAP."""
     from pyspark.sql import functions as F
 
     # tokenize+shingle ONCE, materialized; both the MinHash signature
@@ -2340,7 +2317,7 @@ SEMDEDUP_TARGET_CELL = 512
 
 def semdedup_auto_k(n: int) -> int:
     """k = max(SEMDEDUP_K, ceil(n / SEMDEDUP_TARGET_CELL)) — the SQL
-    twin lives in `_semdedup_sql_nprobe`'s sdk CTE."""
+    twin lives in `_semdedup_sql`'s sdk CTE."""
     return max(SEMDEDUP_K, -(-int(n) // SEMDEDUP_TARGET_CELL))
 
 
@@ -2432,7 +2409,7 @@ SELECT id_a, id_b, cos FROM (
   FROM sd_dups) r WHERE rn = 1"""
 
 
-def _semdedup_sql(spark: bool) -> str:
+def _semdedup_sql(spark: bool, nprobe: int = 1) -> str:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) as one SQL
     statement — the DuckDB oracle formulation (and a valid, slower
     Spark fallback): semantic dedup = embed → cluster → compare ONLY
@@ -2463,14 +2440,11 @@ def _semdedup_sql(spark: bool) -> str:
     row-at-a-time join evaluation paid ~4 µs/pair (137 s at sf0.1)
     where the Arrow-batched exact-integer matmul pays ~0.5 s — the
     canonical "built-ins genuinely can't express it efficiently"
-    escape hatch, bit-identical by the integer argument above."""
-    return _semdedup_sql_nprobe(spark, 1)
+    escape hatch, bit-identical by the integer argument above.
 
-
-def _semdedup_sql_nprobe(spark: bool, nprobe: int) -> str:
-    """`_semdedup_sql` generalized over the probe width (round 12,
-    VERDICT r11 #4 — the oracle formulation extended so nprobe=2 is a
-    CERTIFIED branch, not just a library flag). At nprobe>1 each
+    `nprobe` generalizes the probe width (round 12, VERDICT r11 #4 —
+    the oracle formulation extended so nprobe=2 is a CERTIFIED
+    branch, not just a library flag). At nprobe>1 each
     vector becomes `nprobe` lab memberships — its best cells by
     centroid dot, ranked by `_probe_cells_frag` (ties → smaller cell
     id: exactly numpy's first-max argmax then mask-and-argmax, the
@@ -2646,77 +2620,135 @@ _SEMDEDUP_MEMO: dict[tuple, tuple[list, dict]] = {}
 _SEMDEDUP_MEMO_CAP = 8
 
 
-def _ivf_memo_key(spark: SparkSession) -> tuple | None:
-    """(appId, embeddings-plan semanticHash, row count, max vec_id) —
-    the `_semdedup_memo_key` discipline applied to the embeddings
-    corpus (round 14): plan identity covers sf_dir and shadow_views
-    substitutions; the (count, max) fingerprint catches in-place data
-    changes that alter the row count or the id range (ADVICE r14:
-    mutating embedding VALUES under an unchanged plan, count and id
-    range would still hit the memo — same caveat as
-    _semdedup_memo_key; Spark-style writers create new paths, and a
-    new path is a new plan hash, so the residual risk is an external
-    writer mutating parquet in place mid-application)."""
-    try:
-        h = int(
-            spark.table("embeddings")._jdf.queryExecution()  # noqa: SLF001
-            .analyzed().semanticHash()
-        )
-        n, mx = spark.sql(
-            "SELECT COUNT(*), MAX(vec_id) FROM embeddings").first()
-        return (spark.sparkContext.applicationId, h,
-                int(n or 0), int(mx or 0))
-    except Exception:
-        return None  # catalog unavailable: just don't memoize
+def _memo_put(key: tuple | None, value: tuple[list, dict]) -> None:
+    """Store `value` under `key` in `_SEMDEDUP_MEMO`, evicting the
+    oldest entries first so the memo never holds more than
+    `_SEMDEDUP_MEMO_CAP`. A None key (no caller-vouched corpus
+    identity) stores nothing."""
+    if key is None:
+        return
+    while len(_SEMDEDUP_MEMO) >= _SEMDEDUP_MEMO_CAP:
+        _SEMDEDUP_MEMO.pop(next(iter(_SEMDEDUP_MEMO)))
+    _SEMDEDUP_MEMO[key] = value
 
 
-def _semdedup_memo_key(spark: SparkSession) -> tuple | None:
-    """(appId, documents-plan semanticHash, row count, max doc_id).
-    The (count, max) pair is the cheap corpus fingerprint (ADVICE r12
-    low): an in-place data change under an UNCHANGED plan — parquet
-    rewritten at the same paths, rows appended to an external table
-    within one app — changes it and misses the memo instead of serving
-    a stale codebook. Deliberately an aggregate over the RAW documents
-    view (one narrow columnar scan), never over the quantized relation:
-    fingerprinting vsq would materialize the whole embed chain as a
+def _corpus_memo_key(spark: SparkSession, table: str,
+                     id_col: str) -> tuple | None:
+    """(appId, `table`-plan semanticHash, row count, max `id_col`) —
+    the memo identity of a registered corpus view (`documents` for
+    SemDeDup, `embeddings` for the trained IVF). Plan identity covers
+    sf_dir and shadow_views substitutions. The (count, max) pair is
+    the cheap corpus fingerprint (ADVICE r12 low): an in-place data
+    change under an UNCHANGED plan — parquet rewritten at the same
+    paths, rows appended to an external table within one app —
+    changes it and misses the memo instead of serving a stale
+    codebook. (ADVICE r14: mutating VALUES under an unchanged plan,
+    count and id range would still hit; Spark-style writers create
+    new paths, and a new path is a new plan hash, so the residual risk
+    is an external writer mutating parquet in place mid-application.)
+    Deliberately an aggregate over the RAW view (one narrow columnar
+    scan), never over a derived relation: fingerprinting the quantized
+    SemDeDup relation would materialize the whole embed chain as a
     serialized driver job on every call — measured +5 s on the bench's
     hottest entry (round 13) — where the union action would otherwise
     materialize it once, overlapped with the other branches."""
     try:
         h = int(
-            spark.table("documents")._jdf.queryExecution()  # noqa: SLF001
+            spark.table(table)._jdf.queryExecution()  # noqa: SLF001
             .analyzed().semanticHash()
         )
         n, mx = spark.sql(
-            "SELECT COUNT(*), MAX(doc_id) FROM documents").first()
+            f"SELECT COUNT(*), MAX({id_col}) FROM {table}").first()
         return (spark.sparkContext.applicationId, h,
                 int(n or 0), int(mx or 0))
     except Exception:
         return None  # catalog unavailable: just don't memoize
 
 
-def _semdedup_cell_widths(lab) -> dict[int, int]:
-    """cid -> member count of the assignment frame (one driver
-    round-trip; memoized by the caller)."""
+def _semdedup_cell_widths(lab: DataFrame, col: str = "cid") -> dict:
+    """cell -> member count of an assignment frame, keyed by its `col`
+    (one driver round-trip; memoized by the caller)."""
     from pyspark.sql import functions as F
 
-    return {int(r["cid"]): int(r["n"]) for r in
-            lab.groupBy("cid").agg(F.count(F.lit(1)).alias("n"))
+    return {r[col]: int(r["n"]) for r in
+            lab.groupBy(col).agg(F.count(F.lit(1)).alias("n"))
             .collect()}
 
 
-def _semdedup_spark_df(spark: SparkSession, vsq: str, nprobe: int = 1,
-                       memo_key: tuple | None = None,
-                       k: int | None = None) -> DataFrame:
-    """Spark side of the semdedup branch over a materialized
-    (vec_id, qv) view: train the k=SEMDEDUP_K codebook driver-side
-    (`_semdedup_train_codebook`, the q_sim_topk split), assign cells
-    with a numpy int64 matmul per Arrow batch, then compute each
-    cell's pairwise dots as a tiled BLAS float64 GEMM inside
+def _semdedup_chunks(widths: dict, what: str, why: str) -> dict:
+    """cell -> row-chunk count (ceil(width / SEMDEDUP_CHUNK_ROWS), at
+    most 32) for the skew-salted pair scan. Raises ValueError naming
+    the widest `what` and `why` when any cell is wider than
+    SEMDEDUP_CELL_HARD_CAP."""
+    if any(w > SEMDEDUP_CELL_HARD_CAP for w in widths.values()):
+        c, w = max(widths.items(), key=lambda kv: kv[1])
+        raise ValueError(f"semdedup {what} {c!r} width {w} exceeds "
+                         f"{SEMDEDUP_CELL_HARD_CAP}{why}")
+    return {c: min(32, -(-w // SEMDEDUP_CHUNK_ROWS))
+            for c, w in widths.items()}
+
+
+def _semdedup_keepers(qa, n2a, qb, n2b, cand):
+    """The exact-verify keeper scan shared by the within-set
+    (`_semdedup_spark_df`) and cross (`_semdedup_cross_df`) SemDeDup
+    kernels. `qa` (one row per `cand` row) and `qb` (one row per
+    `cand` column, ids ascending) are quantized vectors as
+    integer-valued float64, `n2a`/`n2b` their squared norms. `cand` is
+    a SUPERSET mask of the pairs whose quantized cosine may reach τ
+    (the margin-widened float32 prefilter), already restricted to
+    admissible partners by the caller (j < i within a cell, not-self
+    across sets). Returns (rows, cols, dots): for every row with a
+    qualifying partner, its SMALLEST qualifying column and that pair's
+    exact integer dot.
+
+    Vectorized keeper pick: the first candidate per row is the
+    smallest qualifying column (margin ⇒ superset) UNLESS it is a
+    margin false positive — verify it exactly in one einsum (the
+    _semdedup_tail_sql argument: every term an integer < 2^53) and
+    route only verify-failures (pairs within 1e-5 of τ: rare) to the
+    per-row scan. A per-row loop for every dropped doc re-scanned
+    O(cell) bools per drop — quadratic again in the clone regime
+    (measured 130 s at sf1-synth; ~8 s vectorized)."""
+    import numpy as np
+
+    den2 = float(SEMDEDUP_TAU_DEN ** 2)
+    num2 = float(SEMDEDUP_TAU_NUM ** 2)
+    rs = np.nonzero(cand.any(axis=1))[0]
+    j1 = cand[rs].argmax(axis=1)  # first candidate per row
+    d1 = np.einsum("ij,ij->i", qa[rs], qb[j1])  # exact
+    ok1 = (d1 > 0) & (den2 * d1 * d1 >= num2 * n2b[j1] * n2a[rs])
+    rows, cols, dots = [rs[ok1]], [j1[ok1]], [d1[ok1]]
+    for r in rs[~ok1]:  # rare: first candidate failed verify
+        js = np.nonzero(cand[r])[0]  # ascending
+        d = qb[js] @ qa[r]  # exact integer dots
+        okj = (d > 0) & (den2 * d * d >= num2 * n2b[js] * n2a[r])
+        if okj.any():
+            m = int(okj.argmax())
+            rows.append(np.array([r]))
+            cols.append(js[m:m + 1])
+            dots.append(d[m:m + 1])
+    return (np.concatenate(rows), np.concatenate(cols),
+            np.concatenate(dots))
+
+
+def _semdedup_spark_df(
+        spark: SparkSession, vsq: str, nprobe: int = 1,
+        memo_key: tuple | None = None,
+        k: int | None = None) -> tuple[DataFrame, DataFrame | None]:
+    """Spark side of the within-set SemDeDup decision over a
+    materialized (vec_id, qv) view: train the k = semdedup_auto_k
+    codebook driver-side (`_semdedup_train_codebook`, the q_sim_topk
+    split), assign cells with a numpy int64 matmul per Arrow batch,
+    then compute each cell's pairwise dots as a tiled BLAS GEMM inside
     applyInPandas — the values are integers < 2^53, so the emitted
     (pair, dotq) set is bit-identical to the oracle's SQL join
     (`_semdedup_tail_sql`'s argument). The division and 6-dp rounding
     run as the SAME SQL expression afterwards.
+
+    Returns (np1_df, np2_df), each (id_a, id_b, cos) with one row per
+    dropped doc naming its smallest keeper: np1_df is the `semdedup`
+    branch of dedup_pairwise_scores (`_semdedup_sql`), np2_df the
+    `semdedup_np2` branch — None unless `nprobe=2`.
 
     `nprobe=2` (round 12, VERDICT r11 #4) bounds the paper's silent
     cross-cell recall trade: each vector ALSO lands in its second-best
@@ -2726,14 +2758,24 @@ def _semdedup_spark_df(spark: SparkSession, vsq: str, nprobe: int = 1,
     share. Pair work is bounded at ~2x (each vector is in exactly 2
     cells); duplicate decisions from the doubled membership collapse
     to ONE row per dropped doc (smallest keeper id, the same
-    tie-break as the in-cell scan). ORACLE-CERTIFIED as the
-    `semdedup_np2` branch of dedup_pairwise_scores: the mask-winner
+    tie-break as the in-cell scan). ORACLE-CERTIFIED: the mask-winner
     re-argmax here is tie-for-tie identical to the SQL side's
     `_probe_cells_frag` struct sort on (-dot, cid), and the pair
     values stay exact integers, so the drop set is bit-identical
-    (`_semdedup_sql_nprobe(spark, 2)`; verified sf0.001/0.01/0.1 —
-    at sf0.001 nprobe=2 recovers 99 boundary-straddling drops the
+    (`_semdedup_sql(spark, 2)`; verified sf0.001/0.01/0.1 — at
+    sf0.001 nprobe=2 recovers 99 boundary-straddling drops the
     452-row nprobe=1 decision misses).
+
+    ONE assignment pass + ONE cell GEMM pass serve both widths (round
+    15, VERDICT r14 #3 — guide §2.4: don't compute things twice): the
+    np2 assignment contains the np1 assignment as its rank-1 rows,
+    and within a cell the np1 candidate pairs are the np2 candidate
+    pairs restricted to rank-1 rows on both sides, so one float32
+    prefilter GEMM block serves both widths with two mask reductions.
+    Chunk ownership only partitions WORK, never changes a decision, so
+    the np2-width chunking covers every rank-1 row exactly once. At
+    nprobe=1 (the curate CLI) only rank-1 rows exist: no second-cell
+    membership is assigned, counted or scanned.
 
     `memo_key` (round 12, VERDICT r11 #2): when the CALLER vouches
     that `vsq` is a pure function of the key (q_pairwise passes its
@@ -2747,14 +2789,14 @@ def _semdedup_spark_df(spark: SparkSession, vsq: str, nprobe: int = 1,
 
     if nprobe not in (1, 2):
         raise ValueError(f"nprobe must be 1 or 2, got {nprobe}")
-    out_schema = ("id_a long, id_b long, dotq double, "
+    out_schema = ("probe int, id_a long, id_b long, dotq double, "
                   "n2a double, n2b double")
     # k under the automated k ∝ n contract (round 13, VERDICT r12 #4):
     # callers that know the corpus (q_pairwise) pass k derived from a
     # CHEAP corpus count — the sdk CTE's twin — so the hot path pays no
     # extra job; library callers with hand-built views fall back to
     # counting the view itself. The memo key already carries the
-    # (count, max id) corpus fingerprint via _semdedup_memo_key; k is
+    # (count, max id) corpus fingerprint via _corpus_memo_key; k is
     # folded in too so a k change always retrains.
     if k is None:
         k = semdedup_auto_k(int(spark.table(vsq).count()))
@@ -2762,49 +2804,11 @@ def _semdedup_spark_df(spark: SparkSession, vsq: str, nprobe: int = 1,
     memo = _SEMDEDUP_MEMO.get(full_key) if full_key else None
     cs = memo[0] if memo else _semdedup_train_codebook(spark, vsq, k=k)
     if not cs:  # empty corpus
-        return spark.createDataFrame(
+        empty = spark.createDataFrame(
             [], "id_a long, id_b long, cos double")
-    import numpy as np
-
-    # codebook in the closure (≤K×64 ints — the broadcast-an-index
-    # analog); assignment runs as one numpy int64 matmul per Arrow
-    # batch. np.argmax returns the FIRST max — identical tie-break to
-    # the SQL side's array_position(ds, array_max(ds)) — and both the
-    # dots and n2q are exact integers, so the assignment and norms
-    # are bit-identical to the oracle's HOF formulation (measured
-    # ~2 s of interpreted 2048-term static sums → ~0.1 s).
-    cb = np.array([[int(c) for c in cv] for cv in cs], dtype=np.int64)
-
-    def _assign(iterator):
-        for pdf in iterator:
-            if not len(pdf):
-                continue
-            q = np.stack([np.asarray(v, dtype=np.int64)
-                          for v in pdf["qv"].to_numpy()])
-            dots = q @ cb.T
-            best = dots.argmax(axis=1)  # first max, like array_position
-            n2q = (q * q).sum(axis=1).astype(np.float64)
-            out = pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "cid": best + 1,  # 1-based like the SQL array_position
-                "n2q": n2q,
-                "qv": pdf["qv"],
-            })
-            if nprobe >= 2 and cb.shape[0] > 1:
-                # second-best cell membership: mask the winner, argmax
-                # again (same first-max tie-break among the rest)
-                d2 = dots.copy()
-                d2[np.arange(len(d2)), best] = np.iinfo(np.int64).min
-                out = pd.concat([out, pd.DataFrame({
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cid": d2.argmax(axis=1) + 1,
-                    "n2q": n2q,
-                    "qv": pdf["qv"],
-                })], ignore_index=True)
-            yield out
-
-    lab = spark.table(vsq).mapInPandas(
-        _assign, "vec_id long, cid int, n2q double, qv array<bigint>"
+        return empty, (empty if nprobe == 2 else None)
+    lab = _semdedup_assign_df(
+        spark.table(vsq).select("vec_id", "qv"), cs, nprobe
     ).localCheckpoint(eager=False)  # two consumers: the width count
     # below materializes it, the chunked pair scan reuses it — left
     # as lineage, the assignment (and the vsq scan under it) would
@@ -2820,20 +2824,16 @@ def _semdedup_spark_df(spark: SparkSession, vsq: str, nprobe: int = 1,
     # the quadratic work spreads across tasks while every (i, j < i)
     # pair is still computed exactly once. Replication is bounded by
     # the 32-chunk cap: ≤ 32× the wide cells' bytes, only when wide.
+    # The widths count every membership (both ranks at nprobe=2): they
+    # dominate the rank-1 widths, so the cap stays at least as strict
+    # and the chunk fan-out covers the bigger scan.
     widths = memo[1] if memo else _semdedup_cell_widths(lab)
-    if full_key and memo is None:
-        while len(_SEMDEDUP_MEMO) >= _SEMDEDUP_MEMO_CAP:
-            _SEMDEDUP_MEMO.pop(next(iter(_SEMDEDUP_MEMO)))
-        _SEMDEDUP_MEMO[full_key] = (cs, widths)
-    if any(w > SEMDEDUP_CELL_HARD_CAP for w in widths.values()):
-        wid, w = max(widths.items(), key=lambda kv: kv[1])
-        raise ValueError(
-            f"semdedup cell {wid} width {w} exceeds "
-            f"{SEMDEDUP_CELL_HARD_CAP} even at auto k={k}: the corpus "
-            "is extremely clone-skewed in embedding space — "
-            "exact-dedup it first, or lower SEMDEDUP_TARGET_CELL")
-    nch = {cid: min(32, -(-w // SEMDEDUP_CHUNK_ROWS))
-           for cid, w in widths.items()}
+    if memo is None:
+        _memo_put(full_key, (cs, widths))
+    nch = _semdedup_chunks(
+        widths, "cell", f" even at auto k={k}: the corpus is extremely "
+        "clone-skewed in embedding space — exact-dedup it first, or "
+        "lower SEMDEDUP_TARGET_CELL")
     nch_case = ("CASE cid " + " ".join(
         f"WHEN {cid} THEN {n}" for cid, n in sorted(nch.items()))
         + " ELSE 1 END")
@@ -2845,7 +2845,8 @@ def _semdedup_spark_df(spark: SparkSession, vsq: str, nprobe: int = 1,
 
         _limit_blas_threads()
         empty = pd.DataFrame(
-            {"id_a": pd.Series(dtype="int64"),
+            {"probe": pd.Series(dtype="int64"),
+             "id_a": pd.Series(dtype="int64"),
              "id_b": pd.Series(dtype="int64"),
              "dotq": pd.Series(dtype="float64"),
              "n2a": pd.Series(dtype="float64"),
@@ -2871,10 +2872,9 @@ def _semdedup_spark_df(spark: SparkSession, vsq: str, nprobe: int = 1,
         #       temporaries — outer, g², masks — and this host's
         #       GEMMs are memory-bandwidth-bound under 32-way task
         #       concurrency, so bytes, not flops, are the budget);
-        #   (2) VERIFY candidates with exact integer math (the
-        #       _semdedup_tail_sql argument: every term an integer
-        #       < 2^53) — candidate rows ≈ dropped docs, so the exact
-        #       phase is linear in drops, not pairs.
+        #   (2) VERIFY candidates with exact integer math
+        #       (`_semdedup_keepers`) — candidate rows ≈ dropped docs,
+        #       so the exact phase is linear in drops, not pairs.
         q = np.stack([np.asarray(v, dtype=np.float64)
                       for v in pdf["qv"].to_numpy()[order]])
         n2 = pdf["n2q"].to_numpy()[order].astype(np.float64)
@@ -2886,276 +2886,52 @@ def _semdedup_spark_df(spark: SparkSession, vsq: str, nprobe: int = 1,
         # verified exactly below.
         u = (q / np.sqrt(n2)[:, None]).astype(np.float32)
         tau = SEMDEDUP_TAU_NUM / SEMDEDUP_TAU_DEN
-        den2 = float(SEMDEDUP_TAU_DEN ** 2)
-        num2 = float(SEMDEDUP_TAU_NUM ** 2)
         tile = max(256, min(4096, (1 << 26) // len(ids)))
-        out_a, out_b, out_d = [], [], []
+        if nprobe == 2:
+            rk1 = pdf["rk"].to_numpy()[order] == 1
+        hits = []  # (probe width, rows, cols, dots) per tile and width
+
+        def _emit(probe, sel, cand):
+            r, c, d = _semdedup_keepers(q[sel], n2[sel], q, n2, cand)
+            hits.append((np.full(len(r), probe), sel[r], c, d))
+
         for t0 in range(0, len(owned), tile):
             sel = owned[t0:t0 + tile]  # ascending (owned is sorted)
             hi = int(sel[-1]) + 1
-            ub = u[sel] @ u[:hi].T  # (|sel|, hi) block
+            ub = u[sel] @ u[:hi].T  # ONE block GEMM for both widths
             cand = ub >= tau - 1e-5
             cand &= np.arange(hi)[None, :] < sel[:, None]  # j < i
-            rs = np.nonzero(cand.any(axis=1))[0]
-            if not len(rs):
-                continue
-            # vectorized keeper pick: the first candidate per row is
-            # the smallest qualifying j (margin ⇒ superset) UNLESS it
-            # is a margin false positive — verify it exactly in one
-            # einsum and route only verify-failures (pairs within
-            # 1e-5 of τ: rare) to the per-row scan. A
-            # per-row loop for every dropped doc re-scanned O(cell)
-            # bools per drop — quadratic again in the clone regime
-            # (measured 130 s at sf1-synth; ~8 s vectorized).
-            j1 = cand[rs].argmax(axis=1)  # first candidate per row
-            d1 = np.einsum("ij,ij->i", q[sel[rs]], q[j1])  # exact
-            ok1 = (d1 > 0) & (den2 * d1 * d1
-                              >= num2 * n2[j1] * n2[sel[rs]])
-            out_a.extend(int(x) for x in sel[rs[ok1]])
-            out_b.extend(int(x) for x in j1[ok1])
-            out_d.extend(float(x) for x in d1[ok1])
-            for r in rs[~ok1]:  # rare: first candidate failed verify
-                js = np.nonzero(cand[r])[0]  # ascending
-                i = int(sel[r])
-                d = q[js] @ q[i]  # exact integer dots
-                okj = (d > 0) & (den2 * d * d >= num2 * n2[js] * n2[i])
-                if okj.any():
-                    out_a.append(i)
-                    out_b.append(int(js[int(okj.argmax())]))
-                    out_d.append(float(d[int(okj.argmax())]))
-        if not out_a:
-            return empty
-        ia = np.array(out_a, dtype=np.int64)
-        ib = np.array(out_b, dtype=np.int64)
+            if nprobe == 2:
+                _emit(2, sel, cand)
+                # np1 = np2 restricted to rank-1 rows AND rank-1
+                # candidate columns — same GEMM values, two masks
+                r1 = rk1[sel]
+                sel, cand = sel[r1], cand[r1] & rk1[None, :hi]
+            _emit(1, sel, cand)
+        probe, ia, ib, dots = (np.concatenate(x) for x in zip(*hits))
         return pd.DataFrame({
+            "probe": probe,
             "id_a": ids[ia], "id_b": ids[ib],
-            "dotq": np.array(out_d, dtype=np.float64),
+            "dotq": dots,
             "n2a": n2[ia], "n2b": n2[ib],
         })
 
     # _cell already emits exactly the smallest-keeper row per dropped
-    # doc (the SQL tail's ROW_NUMBER()=1 row), so no window is needed
-    # — only the oracle tail's literal score expression over the same
-    # exact-integer doubles
-    out = (
-        lab.groupBy("cid", "chunk").applyInPandas(_cell, out_schema)
-        .withColumn("cos", F.expr("round(dotq / sqrt(n2a * n2b), 6)"))
-        .select("id_a", "id_b", "cos")
-    )
-    if nprobe >= 2:
-        # doubled membership can decide one doc in both of its cells,
-        # possibly against different keepers: collapse to one row per
-        # dropped doc, smallest keeper id (the in-cell tie-break,
-        # applied across cells)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("id_a").orderBy("id_b")
-        out = (out.withColumn("_rn", F.row_number().over(w))
-               .where("_rn = 1").drop("_rn"))
-    return out
-
-
-def _semdedup_spark_both_df(
-        spark: SparkSession, vsq: str,
-        memo_key: tuple | None = None,
-        k: int | None = None) -> tuple[DataFrame, DataFrame]:
-    """ONE assignment pass + ONE cell GEMM pass emitting BOTH the
-    nprobe=1 and nprobe=2 decision sets (round 15, VERDICT r14 #3 —
-    guide §2.4: don't compute things twice). `q_pairwise` previously
-    called `_semdedup_spark_df` twice: each call ran its own
-    mapInPandas assignment chain over `vsq`, its own localCheckpoint,
-    its own cell-width collect (cold) and its own applyInPandas GEMM
-    stage — yet the np1 work is a strict SUBSET of the np2 work:
-
-    - the np2 assignment (each vector in its best AND second-best
-      cell) contains the np1 assignment as its rank-1 rows;
-    - within a cell, the np1 candidate pairs are the np2 candidate
-      pairs restricted to rank-1 rows on both sides, so one float32
-      prefilter GEMM block serves both branches with two mask
-      reductions.
-
-    Decision-for-decision identical to the separate calls (pinned by
-    test_semdedup_both_matches_separate): the pair values are the same
-    exact integers, the keeper pick is the same first-candidate scan
-    over ids ascending, and chunk ownership only partitions WORK,
-    never changes a decision — the np2-width chunking used here covers
-    every rank-1 row exactly once just as np1-width chunking did.
-
-    Returns (np1_df, np2_df); both read one lazily-checkpointed
-    combined decision frame, so the branch union materializes the
-    assignment and the GEMM exactly once."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-
-    out_schema = ("branch string, id_a long, id_b long, dotq double, "
-                  "n2a double, n2b double")
-    if k is None:
-        k = semdedup_auto_k(int(spark.table(vsq).count()))
-    full_key = (*memo_key, "both", k) if memo_key else None
-    memo = _SEMDEDUP_MEMO.get(full_key) if full_key else None
-    cs = memo[0] if memo else _semdedup_train_codebook(spark, vsq, k=k)
-    if not cs:  # empty corpus
-        empty = spark.createDataFrame(
-            [], "id_a long, id_b long, cos double")
-        return empty, empty
-    import numpy as np
-
-    cb = np.array([[int(c) for c in cv] for cv in cs], dtype=np.int64)
-
-    def _assign(iterator):
-        for pdf in iterator:
-            if not len(pdf):
-                continue
-            q = np.stack([np.asarray(v, dtype=np.int64)
-                          for v in pdf["qv"].to_numpy()])
-            dots = q @ cb.T
-            best = dots.argmax(axis=1)  # first max, like array_position
-            n2q = (q * q).sum(axis=1).astype(np.float64)
-            out = pd.DataFrame({
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "cid": best + 1,  # 1-based like the SQL array_position
-                "rk": 1,
-                "n2q": n2q,
-                "qv": pdf["qv"],
-            })
-            if cb.shape[0] > 1:
-                # second-best cell membership (rank 2): mask the
-                # winner, argmax again — the np2 membership minus np1
-                d2 = dots.copy()
-                d2[np.arange(len(d2)), best] = np.iinfo(np.int64).min
-                out = pd.concat([out, pd.DataFrame({
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cid": d2.argmax(axis=1) + 1,
-                    "rk": 2,
-                    "n2q": n2q,
-                    "qv": pdf["qv"],
-                })], ignore_index=True)
-            yield out
-
-    lab = spark.table(vsq).mapInPandas(
-        _assign,
-        "vec_id long, cid int, rk int, n2q double, qv array<bigint>",
-    ).localCheckpoint(eager=False)
-    # np2 (total-membership) widths drive chunking and the cap for
-    # both branches: they dominate the np1 widths, so the cap stays
-    # at least as strict and the chunk fan-out covers the bigger scan
-    widths = memo[1] if memo else _semdedup_cell_widths(lab)
-    if full_key and memo is None:
-        while len(_SEMDEDUP_MEMO) >= _SEMDEDUP_MEMO_CAP:
-            _SEMDEDUP_MEMO.pop(next(iter(_SEMDEDUP_MEMO)))
-        _SEMDEDUP_MEMO[full_key] = (cs, widths)
-    if any(w > SEMDEDUP_CELL_HARD_CAP for w in widths.values()):
-        wid, w = max(widths.items(), key=lambda kv: kv[1])
-        raise ValueError(
-            f"semdedup cell {wid} width {w} exceeds "
-            f"{SEMDEDUP_CELL_HARD_CAP} even at auto k={k}: the corpus "
-            "is extremely clone-skewed in embedding space — "
-            "exact-dedup it first, or lower SEMDEDUP_TARGET_CELL")
-    nch = {cid: min(32, -(-w // SEMDEDUP_CHUNK_ROWS))
-           for cid, w in widths.items()}
-    nch_case = ("CASE cid " + " ".join(
-        f"WHEN {cid} THEN {n}" for cid, n in sorted(nch.items()))
-        + " ELSE 1 END")
-    lab = lab.withColumn("chunk", F.explode(F.expr(
-        f"sequence(0, {nch_case} - 1)")))
-
-    def _cell(pdf):
-        import numpy as np
-
-        _limit_blas_threads()
-        empty = pd.DataFrame(
-            {"branch": pd.Series(dtype="object"),
-             "id_a": pd.Series(dtype="int64"),
-             "id_b": pd.Series(dtype="int64"),
-             "dotq": pd.Series(dtype="float64"),
-             "n2a": pd.Series(dtype="float64"),
-             "n2b": pd.Series(dtype="float64")})
-        if len(pdf) < 2:
-            return empty
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy()[order]
-        rk1 = pdf["rk"].to_numpy()[order] == 1
-        chunk = int(pdf["chunk"].iloc[0])
-        n_chunks = int(nch.get(int(pdf["cid"].iloc[0]), 1))
-        owned = np.nonzero(ids % n_chunks == chunk)[0]
-        owned = owned[owned > 0]  # row 0 has no j < i partner
-        if not len(owned):
-            return empty
-        q = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in pdf["qv"].to_numpy()[order]])
-        n2 = pdf["n2q"].to_numpy()[order].astype(np.float64)
-        u = (q / np.sqrt(n2)[:, None]).astype(np.float32)
-        tau = SEMDEDUP_TAU_NUM / SEMDEDUP_TAU_DEN
-        den2 = float(SEMDEDUP_TAU_DEN ** 2)
-        num2 = float(SEMDEDUP_TAU_NUM ** 2)
-        tile = max(256, min(4096, (1 << 26) // len(ids)))
-        res = {"np1": ([], [], []), "np2": ([], [], [])}
-
-        def _emit(br, sel, cand):
-            # keeper pick + exact verify (the _semdedup_spark_df
-            # discipline, unchanged): first candidate per row is the
-            # smallest qualifying j unless it is a margin false
-            # positive; verify-failures (rare) go to the per-row scan
-            out_a, out_b, out_d = res[br]
-            rs = np.nonzero(cand.any(axis=1))[0]
-            if not len(rs):
-                return
-            j1 = cand[rs].argmax(axis=1)
-            d1 = np.einsum("ij,ij->i", q[sel[rs]], q[j1])  # exact
-            ok1 = (d1 > 0) & (den2 * d1 * d1
-                              >= num2 * n2[j1] * n2[sel[rs]])
-            out_a.extend(int(x) for x in sel[rs[ok1]])
-            out_b.extend(int(x) for x in j1[ok1])
-            out_d.extend(float(x) for x in d1[ok1])
-            for r in rs[~ok1]:  # rare: first candidate failed verify
-                js = np.nonzero(cand[r])[0]  # ascending
-                i = int(sel[r])
-                d = q[js] @ q[i]  # exact integer dots
-                okj = (d > 0) & (den2 * d * d >= num2 * n2[js] * n2[i])
-                if okj.any():
-                    out_a.append(i)
-                    out_b.append(int(js[int(okj.argmax())]))
-                    out_d.append(float(d[int(okj.argmax())]))
-
-        for t0 in range(0, len(owned), tile):
-            sel = owned[t0:t0 + tile]  # ascending (owned is sorted)
-            hi = int(sel[-1]) + 1
-            ub = u[sel] @ u[:hi].T  # ONE block GEMM for both branches
-            cand2 = ub >= tau - 1e-5
-            cand2 &= np.arange(hi)[None, :] < sel[:, None]  # j < i
-            _emit("np2", sel, cand2)
-            r1 = np.nonzero(rk1[sel])[0]
-            if len(r1):
-                # np1 = np2 restricted to rank-1 rows AND rank-1
-                # candidate columns — same GEMM values, two masks
-                _emit("np1", sel[r1], cand2[r1] & rk1[:hi][None, :])
-        frames = []
-        for br, (out_a, out_b, out_d) in res.items():
-            if not out_a:
-                continue
-            ia = np.array(out_a, dtype=np.int64)
-            ib = np.array(out_b, dtype=np.int64)
-            frames.append(pd.DataFrame({
-                "branch": br,
-                "id_a": ids[ia], "id_b": ids[ib],
-                "dotq": np.array(out_d, dtype=np.float64),
-                "n2a": n2[ia], "n2b": n2[ib],
-            }))
-        return pd.concat(frames, ignore_index=True) if frames else empty
-
-    # LAZY checkpoint on the combined decision frame: both branch
-    # views (two consumers inside the union action) read it — left as
-    # lineage, the GEMM pass (and the assignment under it) would
-    # re-run once per branch. Everything the checkpoint computes is
-    # needed by the action (the decisions ARE the rows), so no pruned
-    # work is forced (the round-14 simhash lesson).
-    both = (lab.groupBy("cid", "chunk").applyInPandas(_cell, out_schema)
-            .localCheckpoint(eager=False))
-    base = both.withColumn(
-        "cos", F.expr("round(dotq / sqrt(n2a * n2b), 6)"))
-    np1 = base.where("branch = 'np1'").select("id_a", "id_b", "cos")
-    np2 = base.where("branch = 'np2'").select("id_a", "id_b", "cos")
+    # doc and probe width (the SQL tail's ROW_NUMBER()=1 row), so the
+    # np1 side needs no window — only the oracle tail's literal score
+    # expression over the same exact-integer doubles. LAZY checkpoint
+    # on the decision frame: at nprobe=2 both width views (two
+    # consumers inside the union action) read it — left as lineage,
+    # the GEMM pass (and the assignment under it) would re-run once
+    # per width. Everything the checkpoint computes is needed by the
+    # action (the decisions ARE the rows), so no pruned work is forced
+    # (the round-14 simhash lesson).
+    dec = (lab.groupBy("cid", "chunk").applyInPandas(_cell, out_schema)
+           .localCheckpoint(eager=False)
+           .withColumn("cos", F.expr("round(dotq / sqrt(n2a * n2b), 6)")))
+    np1 = dec.where("probe = 1").select("id_a", "id_b", "cos")
+    if nprobe == 1:
+        return np1, None
     # doubled membership can decide one doc in both of its cells,
     # possibly against different keepers: collapse to one row per
     # dropped doc, smallest keeper id (the in-cell tie-break,
@@ -3163,24 +2939,31 @@ def _semdedup_spark_both_df(
     from pyspark.sql import Window
 
     w = Window.partitionBy("id_a").orderBy("id_b")
-    np2 = (np2.withColumn("_rn", F.row_number().over(w))
+    np2 = (dec.where("probe = 2").select("id_a", "id_b", "cos")
+           .withColumn("_rn", F.row_number().over(w))
            .where("_rn = 1").drop("_rn"))
     return np1, np2
 
 
-def _semdedup_assign_df(df: DataFrame,
-                        codebook: list[list[int]]) -> DataFrame:
+def _semdedup_assign_df(df: DataFrame, codebook: list[list[int]],
+                        nprobe: int = 1) -> DataFrame:
     """First-argmax integer cell assignment under a literal codebook
     as one numpy int64 matmul per Arrow batch — the scale-honest twin
     of `semdedup_cell_expr`, whose inlined array literal pays 2·K·dim
     interpreted lambda evals per row and whose SQL text grows with K
     (under the k ∝ n contract K grows with the corpus, so the stream
-    gate and its retag job use this form). Input needs `qv
+    gate and its retag job use this form; measured ~2 s of
+    interpreted 2048-term static sums → ~0.1 s). Input needs `qv
     array<bigint>`; every other column passes through; output adds
     `cid int` (1-based) and, when absent, `n2q double`. np.argmax
     returns the FIRST max — the same tie-break as array_position —
     and dots/norms are exact integers, so the assignment is
-    bit-identical to the SQL expression."""
+    bit-identical to the SQL expression.
+
+    `nprobe=2` (the within-set SemDeDup np2 membership) also emits
+    each row again in its second-best cell — mask the winner, argmax
+    again, the same first-max tie-break among the rest — and adds
+    `rk int` (1 = best cell, 2 = second-best)."""
     import numpy as np
     import pandas as pd
 
@@ -3191,6 +2974,8 @@ def _semdedup_assign_df(df: DataFrame,
         StructType,
     )
 
+    # codebook in the closure (≤K×64 ints — the broadcast-an-index
+    # analog)
     cb = np.array([[int(c) for c in cv] for cv in codebook],
                   dtype=np.int64)
     add_n2 = "n2q" not in df.columns
@@ -3199,6 +2984,8 @@ def _semdedup_assign_df(df: DataFrame,
     fields = list(df.schema.fields) + [StructField("cid", IntegerType())]
     if add_n2:
         fields.append(StructField("n2q", DoubleType()))
+    if nprobe == 2:
+        fields.append(StructField("rk", IntegerType()))
     schema = StructType(fields)
 
     def _assign(iterator):
@@ -3207,10 +2994,21 @@ def _semdedup_assign_df(df: DataFrame,
                 continue
             q = np.stack([np.asarray(v, dtype=np.int64)
                           for v in pdf["qv"].to_numpy()])
+            dots = q @ cb.T
+            best = dots.argmax(axis=1)  # first max, like array_position
             pdf = pdf.copy()
-            pdf["cid"] = (q @ cb.T).argmax(axis=1) + 1
+            pdf["cid"] = best + 1
             if add_n2:
                 pdf["n2q"] = (q * q).sum(axis=1).astype(np.float64)
+            if nprobe == 2:
+                pdf["rk"] = 1
+                if cb.shape[0] > 1:
+                    dots[np.arange(len(dots)), best] = \
+                        np.iinfo(np.int64).min
+                    pdf = pd.concat(
+                        [pdf, pdf.assign(cid=dots.argmax(axis=1) + 1,
+                                         rk=2)],
+                        ignore_index=True)
             yield pdf
 
     return df.mapInPandas(_assign, schema)
@@ -3238,8 +3036,9 @@ def _semdedup_cross_df(spark: SparkSession, query_df: DataFrame,
     - scoring is the certified two-phase scan — one float32 GEMM
       prefilter per tile (error < 1e-5 for K=64 unit vectors, margin-
       widened to a guaranteed superset), exact integer verification of
-      candidates (every term an integer < 2^53) — never a per-pair
-      interpreted HOF.
+      candidates (every term an integer < 2^53) in the keeper scan the
+      within-set kernel shares (`_semdedup_keepers`) — never a
+      per-pair interpreted HOF.
 
     Frames: query_df (doc_id, cell, qv array<bigint>, n2q) and
     corpus_df (doc_id, cell, qv, n2q); `cell` is any equality-
@@ -3263,25 +3062,15 @@ def _semdedup_cross_df(spark: SparkSession, query_df: DataFrame,
         # key pass the memoized dict instead (round 14 — this collect
         # used to run the whole assign chain at BUILD time on every
         # invocation of the semantic_cross catalog branch)
-        widths = {r["cell"]: int(r["n"]) for r in
-                  pruned.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-                  .collect()}
+        widths = _semdedup_cell_widths(pruned, "cell")
     if not widths:
         return spark.createDataFrame([], "doc_id long, sem_dup_of long")
-    over = {c: w for c, w in widths.items()
-            if w > SEMDEDUP_CELL_HARD_CAP}
-    if over:
-        c, w = max(over.items(), key=lambda kv: kv[1])
-        raise ValueError(
-            f"semdedup corpus cell {c!r} width {w} exceeds "
-            f"{SEMDEDUP_CELL_HARD_CAP}: the accumulated corpus "
-            "outgrew its codebook — retrain at semdedup_auto_k "
-            "(the stream gate does this automatically) or lower "
-            "SEMDEDUP_TARGET_CELL")
+    nch = _semdedup_chunks(
+        widths, "corpus cell", ": the accumulated corpus outgrew its "
+        "codebook — retrain at semdedup_auto_k (the stream gate does "
+        "this automatically) or lower SEMDEDUP_TARGET_CELL")
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    nch = {c: min(32, -(-w // SEMDEDUP_CHUNK_ROWS))
-           for c, w in widths.items()}
     chmap = spark.createDataFrame(
         list(nch.items()),
         StructType([query_df.schema["cell"],
@@ -3329,44 +3118,22 @@ def _semdedup_cross_df(spark: SparkSession, query_df: DataFrame,
         uc = (qc / np.sqrt(n2c)[:, None]).astype(np.float32)
         uq = (qq / np.sqrt(n2q)[:, None]).astype(np.float32)
         tau = SEMDEDUP_TAU_NUM / SEMDEDUP_TAU_DEN
-        den2 = float(SEMDEDUP_TAU_DEN ** 2)
-        num2 = float(SEMDEDUP_TAU_NUM ** 2)
         tile = max(256, min(4096, (1 << 26) // len(ids_c)))
-        out_q, out_c, out_d = [], [], []
+        hits = []
         for t0 in range(0, len(ids_q), tile):
             sel = slice(t0, min(t0 + tile, len(ids_q)))
             g = uq[sel] @ uc.T
             cand = g >= tau - 1e-5
             # a redelivered doc must not match ITSELF in the corpus
             cand &= ids_c[None, :] != ids_q[sel][:, None]
-            rs = np.nonzero(cand.any(axis=1))[0]
-            if not len(rs):
-                continue
-            # smallest qualifying corpus id = first candidate (corpus
-            # sorted ascending) unless it is a margin false positive —
-            # verify exactly, route rare failures to a per-row scan
-            j1 = cand[rs].argmax(axis=1)
-            gi = np.arange(len(ids_q))[sel][rs]
-            d1 = np.einsum("ij,ij->i", qq[gi], qc[j1])
-            ok1 = (d1 > 0) & (den2 * d1 * d1 >= num2 * n2c[j1] * n2q[gi])
-            out_q.extend(int(x) for x in gi[ok1])
-            out_c.extend(int(x) for x in j1[ok1])
-            out_d.extend(float(x) for x in d1[ok1])
-            for r, i in zip(rs[~ok1], gi[~ok1]):
-                js = np.nonzero(cand[r])[0]
-                d = qc[js] @ qq[i]
-                okj = (d > 0) & (den2 * d * d >= num2 * n2c[js] * n2q[i])
-                if okj.any():
-                    out_q.append(int(i))
-                    out_c.append(int(js[int(okj.argmax())]))
-                    out_d.append(float(d[int(okj.argmax())]))
-        if not out_q:
-            return empty
-        iq = np.array(out_q, dtype=np.int64)
-        ic = np.array(out_c, dtype=np.int64)
+            # smallest qualifying corpus id = first verified candidate
+            # (corpus sorted ascending)
+            r, c, d = _semdedup_keepers(qq[sel], n2q[sel], qc, n2c, cand)
+            hits.append((r + t0, c, d))
+        iq, ic, dots = (np.concatenate(x) for x in zip(*hits))
         return pd.DataFrame({
             "doc_id": ids_q[iq], "sem_dup_of": ids_c[ic],
-            "dotq": np.array(out_d, dtype=np.float64),
+            "dotq": dots,
             "n2a": n2q[iq], "n2b": n2c[ic]})
 
     return (
@@ -3456,8 +3223,11 @@ def _semantic_cross_spark_df(spark: SparkSession, vsq: str,
     sq = spark.table(vsq)
     corpus = sq.where("vec_id < 100000")
     # same memo discipline as _semdedup_spark_df (round 12, VERDICT
-    # r11 #2): the corpus-side codebook is a deterministic function of
-    # the corpus key, so a warm session pays zero trainer round-trips
+    # r11 #2): the corpus-side codebook and the pruned-cell width dict
+    # are deterministic functions of the corpus key, so a warm session
+    # pays zero trainer round-trips and no BUILD-time width collect
+    # (round 14: the assign chain + groupBy ran eagerly on every
+    # catalog invocation)
     full_key = (*memo_key, "cross", k) if memo_key else None
     memo = _SEMDEDUP_MEMO.get(full_key) if full_key else None
     if memo:
@@ -3469,10 +3239,6 @@ def _semantic_cross_spark_df(spark: SparkSession, vsq: str,
             cs = _semdedup_train_codebook(spark, vtr, k=k)
         finally:
             spark.catalog.dropTempView(vtr)
-        if full_key:
-            while len(_SEMDEDUP_MEMO) >= _SEMDEDUP_MEMO_CAP:
-                _SEMDEDUP_MEMO.pop(next(iter(_SEMDEDUP_MEMO)))
-            _SEMDEDUP_MEMO[full_key] = (cs, {})
     if not cs:
         return spark.createDataFrame(
             [], "id_a long, id_b long, cos double")
@@ -3488,25 +3254,13 @@ def _semantic_cross_spark_df(spark: SparkSession, vsq: str,
     cdf = (_semdedup_assign_df(corpus, cs)
            .selectExpr("vec_id AS doc_id", *shape)
            .localCheckpoint(eager=False))
-    # widths memo (round 14, the _semdedup_spark_df discipline): the
-    # pruned-cell width dict is a deterministic function of the corpus
-    # key — computing it cost a BUILD-time eager collect (assign chain
-    # + groupBy) on every catalog invocation; warm calls now skip it
     from pyspark.sql import functions as F
 
-    wkey = (*memo_key, "cross_widths", k) if memo_key else None
-    wmemo = _SEMDEDUP_MEMO.get(wkey) if wkey else None
-    widths = wmemo[1] if wmemo else None
-    if widths is None:
-        widths = {
-            r["cell"]: int(r["n"]) for r in
-            cdf.join(F.broadcast(qdf.select("cell").distinct()),
-                     "cell", "left_semi")
-            .groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()}
-        if wkey:
-            while len(_SEMDEDUP_MEMO) >= _SEMDEDUP_MEMO_CAP:
-                _SEMDEDUP_MEMO.pop(next(iter(_SEMDEDUP_MEMO)))
-            _SEMDEDUP_MEMO[wkey] = ([], widths)
+    widths = memo[1] if memo else _semdedup_cell_widths(
+        cdf.join(F.broadcast(qdf.select("cell").distinct()),
+                 "cell", "left_semi"), "cell")
+    if memo is None:
+        _memo_put(full_key, (cs, widths))
     return _semdedup_cross_df(spark, qdf, cdf, widths=widths).selectExpr(
         "doc_id AS id_a", "sem_dup_of AS id_b", "cos")
 
@@ -3579,7 +3333,7 @@ SELECT 'semdedup_np2' AS method, CAST(id_a AS BIGINT) AS id_a,
        CAST(id_b AS BIGINT) AS id_b, cos AS score,
        CAST(TRUE AS BOOLEAN) AS near_dup
 FROM {semdedup_np2_view if semdedup_np2_view is not None
-      else '(' + _semdedup_sql_nprobe(spark, 2).strip() + ')'}
+      else '(' + _semdedup_sql(spark, 2).strip() + ')'}
 UNION ALL
 SELECT 'semantic_cross' AS method, CAST(id_a AS BIGINT) AS id_a,
        CAST(id_b AS BIGINT) AS id_b, cos AS score,
@@ -3631,16 +3385,14 @@ LATERAL VIEW posexplode({SHINGLE_SPARK}) t AS pos, s
     # memo vouch: vsq is a pure function of the documents view
     # (_semdedup_sq_sql reads only the corpus CTE), so the codebook +
     # cell widths memoize on the documents plan identity PLUS the
-    # (count, max vec_id) fingerprint _semdedup_spark_df computes —
+    # (count, max doc_id) fingerprint _corpus_memo_key computes —
     # an in-place rewrite of the same parquet paths within one app
     # changes the fingerprint and misses the memo (ADVICE r12 low)
-    mk = _semdedup_memo_key(spark)  # once: carries the fingerprint agg
+    mk = _corpus_memo_key(spark, "documents", "doc_id")  # once
     k = semdedup_auto_k(2 * mk[2]) if mk else None
-    # round 15 (VERDICT r14 #3): ONE assignment pass + ONE cell GEMM
-    # pass emit both probe widths' decisions — the np1 work is a
-    # subset of the np2 work, so the separate calls paid a second
-    # mapInPandas chain, checkpoint and GEMM stage for nothing
-    sd1, sd2 = _semdedup_spark_both_df(spark, vsq, memo_key=mk, k=k)
+    # ONE assignment pass + ONE cell GEMM pass emit both probe widths'
+    # decisions (the np1 work is a subset of the np2 work)
+    sd1, sd2 = _semdedup_spark_df(spark, vsq, nprobe=2, memo_key=mk, k=k)
     sd1.createOrReplaceTempView(vsd)
     sd2.createOrReplaceTempView(vsd2)
     # the 9th branch (round 14): the streaming gate's ASYMMETRIC
@@ -4091,7 +3843,7 @@ def assign_ivf_cells(df: DataFrame, codebook: list[list[int]]) -> DataFrame:
 def semdedup_cell_expr(codebook: list[list[int]], col: str = "qv") -> str:
     """1-based integer-argmax cell assignment for a QUANTIZED bigint
     vector column over a literal codebook — the narrow/stream twin of
-    `_semdedup_spark_df`'s numpy assignment (array_position picks the
+    `_semdedup_assign_df`'s numpy assignment (array_position picks the
     FIRST maximum, the same tie-break as np.argmax; every term is an
     exact integer). Zero-norm rows are the caller's job to exclude.
     One self-contained expression — no shuffle, no state — so it runs
@@ -4396,7 +4148,7 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # change misses the memo; warm calls pay one narrow fingerprint
     # aggregate instead of the training job, and vbase materializes
     # inside the union action, overlapped with the other branches.
-    ik = _ivf_memo_key(spark)
+    ik = _corpus_memo_key(spark, "embeddings", "vec_id")
     ikey = (*ik, "ivf_trained8") if ik else None
     imemo = _SEMDEDUP_MEMO.get(ikey) if ikey else None
     if imemo is not None:
@@ -4407,10 +4159,7 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             + " SELECT cs FROM cents1"
         ).collect()
         cs = rows[0][0] if rows and rows[0][0] else []
-        if ikey:
-            while len(_SEMDEDUP_MEMO) >= _SEMDEDUP_MEMO_CAP:
-                _SEMDEDUP_MEMO.pop(next(iter(_SEMDEDUP_MEMO)))
-            _SEMDEDUP_MEMO[ikey] = (cs, {})
+        _memo_put(ikey, (cs, {}))
     if cs:
         d_exprs = []
         for cv in cs:

@@ -44,7 +44,7 @@ def _run_to_completion(df: DataFrame, output_mode: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from ..session import _fast_local_dir
+    from ..session import _fast_local_dir, scoped_conf
 
     name = f"pq_stream_sink_{next(_sink_ids)}"
     # recentProgress keeps only the last N entries (default 100); a
@@ -70,39 +70,34 @@ def _run_to_completion(df: DataFrame, output_mode: str) -> DataFrame:
     # coalescing (round 15, session.py) would collapse each batch's
     # exchanges to one partition and serialize the batch (measured:
     # stream_changelog exec_addBatch 0.89 s → 1.33 s). Scope
-    # parallelism-first coalescing back ON for the drain; restore
-    # after so batch queries keep the session default.
+    # parallelism-first coalescing back ON for the drain; the scope
+    # restores the session default, also when start() raises.
     pf_key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    try:
-        pf_prev = df.sparkSession.conf.get(pf_key)
-    except Exception:
-        pf_prev = None
-    df.sparkSession.conf.set(pf_key, "true")
-    t0 = time.perf_counter()
-    w = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-    )
-    if ckpt:
-        w = w.option("checkpointLocation", ckpt)
-    q = w.start()
-    start_sec = time.perf_counter() - t0
     progress: list[dict] = []
     try:
-        q.processAllAvailable()
-        # StreamingQueryProgress objects (pyspark 4); .json is the
-        # stable cross-version accessor
-        progress = [json.loads(p.json) for p in (q.recentProgress or [])]
+        with scoped_conf(df.sparkSession, {pf_key: "true"}):
+            t0 = time.perf_counter()
+            w = (
+                df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+            )
+            if ckpt:
+                w = w.option("checkpointLocation", ckpt)
+            q = w.start()
+            start_sec = time.perf_counter() - t0
+            try:
+                q.processAllAvailable()
+                # StreamingQueryProgress objects (pyspark 4); .json is
+                # the stable cross-version accessor
+                progress = [json.loads(p.json)
+                            for p in (q.recentProgress or [])]
+            finally:
+                q.stop()
+                q.awaitTermination()
     finally:
-        q.stop()
-        q.awaitTermination()
         if ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
-        if pf_prev is None:
-            df.sparkSession.conf.unset(pf_key)
-        else:
-            df.sparkSession.conf.set(pf_key, pf_prev)
     drain_sec = time.perf_counter() - t0 - start_sec
     add_batch_ms = trigger_ms = 0
     n_batches = 0

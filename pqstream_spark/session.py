@@ -16,6 +16,7 @@ One place to set the configs that matter for both local testing
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -45,6 +46,28 @@ def ensure_engine_confs(spark: SparkSession) -> SparkSession:
         except Exception:  # pragma: no cover - conf missing in future versions
             pass
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set runtime confs for the body of a `with` block, then restore
+    each key's previous value (or unset it if it had none) — also when
+    the body raises. Every set happens inside the restoring scope, so
+    a failure part-way through leaves the session as it was. The confs
+    are session-wide: not safe against concurrent queries on the same
+    session."""
+    prev: dict[str, str | None] = {}
+    try:
+        for k, v in confs.items():
+            prev[k] = spark.conf.get(k, None)
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, old in prev.items():
+            if old is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, old)
 
 
 def _fast_local_dir() -> str | None:

@@ -258,18 +258,3 @@ def upsert_parquet_sink(
         shutil.rmtree(tmp_root, ignore_errors=True)
 
     return write
-
-
-def kafka_writer(df: DataFrame, topic: str, servers: str):
-    """Idiomatic K2/F3 replacement at scale: key by table for per-table
-    order, value = JSON event. Needs the spark-sql-kafka package on the
-    classpath (not in this container — plan-only here)."""
-    out = df.select(
-        F.col("table_name").cast("string").alias("key"),
-        F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value"),
-    )
-    return (
-        out.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", servers)
-        .option("topic", topic)
-    )

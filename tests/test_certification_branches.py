@@ -330,12 +330,11 @@ def test_semdedup_codebook_memoized_per_corpus(spark):
             for r in df.collect() if r["method"] == "semdedup")
 
     first = sd_rows(llm.q_pairwise(spark, SF_SMOKE))
-    # one memo entry for the MERGED np1+np2 pass (round 15: both probe
-    # widths share one assignment + one GEMM, so one codebook/width
-    # entry) plus the round-14 semantic_cross branch's corpus-side
-    # codebook AND its pruned-cell width dict, all under the same
-    # corpus key
-    assert first and len(llm._SEMDEDUP_MEMO) == 3
+    # one memo entry for the single np1+np2 pass (both probe widths
+    # share one assignment + one GEMM, so one codebook/width entry)
+    # plus one for the semantic_cross branch (its corpus-side codebook
+    # AND its pruned-cell width dict), both under the same corpus key
+    assert first and len(llm._SEMDEDUP_MEMO) == 2
     orig_train = llm._semdedup_train_codebook
     orig_widths = llm._semdedup_cell_widths
 
@@ -410,10 +409,9 @@ def test_semdedup_nprobe2_catches_boundary_pair(spark):
         rows, "vec_id long, qv array<bigint>"
     ).createOrReplaceTempView(vsq)
     try:
-        got1 = {(r.id_a, r.id_b)
-                for r in _semdedup_spark_df(spark, vsq).collect()}
-        got2 = {(r.id_a, r.id_b)
-                for r in _semdedup_spark_df(spark, vsq, nprobe=2).collect()}
+        np1, np2 = _semdedup_spark_df(spark, vsq, nprobe=2)
+        got1 = {(r.id_a, r.id_b) for r in np1.collect()}
+        got2 = {(r.id_a, r.id_b) for r in np2.collect()}
     finally:
         spark.catalog.dropTempView(vsq)
     a, b = sorted(out_sample[:2])
@@ -430,7 +428,7 @@ def test_semdedup_auto_k_bounds_cells(spark):
     corpus gets proportionally more cells WITHOUT manual retuning, the
     driver-SF k stays exactly SEMDEDUP_K (certified hashes unmoved),
     k folds into the memo key (a k change always retrains), and
-    _semdedup_memo_key carries the (count, max doc_id) corpus
+    _corpus_memo_key carries the (count, max doc_id) corpus
     fingerprint — computed as one CHEAP aggregate over the raw
     documents view, never the quantized relation — so in-place data
     changes under an unchanged plan retrain instead of serving a
@@ -492,64 +490,107 @@ def test_semdedup_auto_k_bounds_cells(spark):
         for v in (v1, v2):
             spark.catalog.dropTempView(v)
 
-    # the q_pairwise-path fingerprint: _semdedup_memo_key aggregates
+    # the q_pairwise-path fingerprint: _corpus_memo_key aggregates
     # (count, max doc_id) over the RAW documents view — the cheap
     # in-place-change detector the vouched memo key rides on
     from pqstream_spark.queries.llm import (
-        _semdedup_memo_key,
+        _corpus_memo_key,
         register_views,
     )
 
     register_views(spark, SF_SMOKE)
-    mk = _semdedup_memo_key(spark)
+    mk = _corpus_memo_key(spark, "documents", "doc_id")
     assert mk is not None and len(mk) == 4
     n_docs = spark.table("documents").count()
     max_id = spark.sql("SELECT MAX(doc_id) FROM documents").first()[0]
     assert mk[2] == n_docs and mk[3] == int(max_id)
 
 
-def test_semdedup_both_matches_separate(spark):
-    """Round 15 (VERDICT r14 #3): the merged single-pass
-    `_semdedup_spark_both_df` must emit decision-for-decision the same
-    rows as the separate nprobe=1 and nprobe=2 calls — on (a) a
-    multi-cell hash corpus dense in within-cell clone decisions, and
-    (b) the axis-seeded boundary corpus where nprobe=2 adds
-    cross-cell-only decisions nprobe=1 cannot see."""
+def test_semdedup_np1_np2_match_duckdb_tail(spark):
+    """The one within-set builder `_semdedup_spark_df` emits, at both
+    probe widths, exactly the rows DuckDB's oracle tail
+    (`_semdedup_tail_sql(False, 'lab')`) decides over a `lab` assigned
+    under the SAME trained codebook — first-argmax cells for np1; best
+    and second-best memberships, ranked by (-dot, cid) like
+    `_probe_cells_frag`, for np2. The np1 frame is checked from both
+    the nprobe=1 call (the curate CLI's) and the nprobe=2 call
+    (q_pairwise's). Fixtures: (a) a multi-cell hash corpus dense in
+    within-cell clone decisions, and (b) the axis-seeded boundary
+    corpus where nprobe=2 adds cross-cell-only decisions nprobe=1
+    cannot see."""
     import uuid
+
+    import duckdb
 
     from pqstream_spark.functions.sampling import (
         A, B, DEFAULT_THRESHOLD, M,
     )
     from pqstream_spark.queries.llm import (
-        _semdedup_spark_both_df,
         _semdedup_spark_df,
+        _semdedup_tail_sql,
+        _semdedup_train_codebook,
     )
 
-    def both_vs_separate(vsq):
-        sep1 = {tuple(r) for r in
-                _semdedup_spark_df(spark, vsq).collect()}
-        sep2 = {tuple(r) for r in
-                _semdedup_spark_df(spark, vsq, nprobe=2).collect()}
-        got1_df, got2_df = _semdedup_spark_both_df(spark, vsq)
-        got1 = {tuple(r) for r in got1_df.collect()}
-        got2 = {tuple(r) for r in got2_df.collect()}
-        assert got1 == sep1
-        assert got2 == sep2
-        return sep1, sep2
+    def duck_decisions(rows, cs, nprobe):
+        con = duckdb.connect()
+        try:
+            con.execute("CREATE TABLE sq (vec_id BIGINT, qv BIGINT[])")
+            con.executemany("INSERT INTO sq VALUES (?, ?)", rows)
+            con.execute("CREATE TABLE cb (cid INTEGER, cv BIGINT[])")
+            con.executemany("INSERT INTO cb VALUES (?, ?)",
+                            [(i + 1, cv) for i, cv in enumerate(cs)])
+            # dots of integers < 2^21 are exact in DOUBLE
+            con.execute(f"""
+CREATE TABLE lab AS
+SELECT vec_id, qd, n2q, cid FROM (
+  SELECT s.vec_id, CAST(s.qv AS DOUBLE[]) AS qd,
+         list_dot_product(CAST(s.qv AS DOUBLE[]),
+                          CAST(s.qv AS DOUBLE[])) AS n2q,
+         c.cid,
+         ROW_NUMBER() OVER (
+           PARTITION BY s.vec_id
+           ORDER BY list_dot_product(CAST(s.qv AS DOUBLE[]),
+                                     CAST(c.cv AS DOUBLE[])) DESC,
+                    c.cid) AS rk
+  FROM sq s CROSS JOIN cb c) t
+WHERE rk <= {nprobe}""")
+            return {tuple(r) for r in con.execute(
+                "WITH " + _semdedup_tail_sql(False, "lab")).fetchall()}
+        finally:
+            con.close()
+
+    def check(rows):
+        vsq = f"_sd_duck_{uuid.uuid4().hex[:8]}"
+        spark.createDataFrame(
+            rows, "vec_id long, qv array<bigint>"
+        ).createOrReplaceTempView(vsq)
+        try:
+            cs = _semdedup_train_codebook(spark, vsq)
+            only1, none2 = _semdedup_spark_df(spark, vsq)
+            np1, np2 = _semdedup_spark_df(spark, vsq, nprobe=2)
+            got_only1 = {tuple(r) for r in only1.collect()}
+            got1 = {tuple(r) for r in np1.collect()}
+            got2 = {tuple(r) for r in np2.collect()}
+        finally:
+            spark.catalog.dropTempView(vsq)
+        assert none2 is None
+        want1 = duck_decisions(rows, cs, 1)
+        want2 = duck_decisions(rows, cs, 2)
+        assert got_only1 == want1
+        assert got1 == want1
+        assert got2 == want2
+        return want1, want2
 
     # (a) hash-noise base + planted clone pairs across many cells
-    vsq = f"_both_{uuid.uuid4().hex[:8]}"
-    spark.sql(
-        "SELECT id AS vec_id, transform(sequence(0, 63), i -> "
-        "CAST(pmod(xxhash64(CAST(id / 2 AS BIGINT) * 64 + i), 200) - 100"
-        " + CASE WHEN id % 2 = 1 AND i = 0 THEN 1 ELSE 0 END AS BIGINT)"
-        ") AS qv FROM range(1, 1200)"
-    ).localCheckpoint().createOrReplaceTempView(vsq)
-    try:
-        sep1, _ = both_vs_separate(vsq)
-    finally:
-        spark.catalog.dropTempView(vsq)
-    assert sep1, "fixture (a) plants no np1 decisions — strengthen it"
+    rows_a = [
+        (r.vec_id, list(r.qv)) for r in spark.sql(
+            "SELECT id AS vec_id, transform(sequence(0, 63), i -> "
+            "CAST(pmod(xxhash64(CAST(id / 2 AS BIGINT) * 64 + i), 200)"
+            " - 100 + CASE WHEN id % 2 = 1 AND i = 0 THEN 1 ELSE 0 END"
+            " AS BIGINT)) AS qv FROM range(1, 1200)").collect()
+    ]
+    want1a, _ = check(rows_a)
+    assert want1a, "fixture (a) plants no np1 decisions — strengthen it"
 
     # (b) two axis seeds -> two cells; straddler pairs tilt to
     # different best cells (np2-only catches), clone pairs sit inside
@@ -567,27 +608,20 @@ def test_semdedup_both_matches_separate(spark):
             v[idx] = val
         return v
 
-    rows = [
+    rows_b = [
         (in_sample[0], vec((0, 127))),
         (in_sample[1], vec((1, 127))),
     ]
     for _ in range(6):  # six straddler pairs
         a, b = next(outs), next(outs)
-        rows.append((a, vec((0, 100), (1, 99))))
-        rows.append((b, vec((0, 99), (1, 100))))
+        rows_b.append((a, vec((0, 100), (1, 99))))
+        rows_b.append((b, vec((0, 99), (1, 100))))
     for _ in range(6):  # six in-cell clone pairs on axis 0
         a, b = next(outs), next(outs)
-        rows.append((a, vec((0, 120), (2, 3))))
-        rows.append((b, vec((0, 120), (2, 4))))
-    vsq2 = f"_both_{uuid.uuid4().hex[:8]}"
-    spark.createDataFrame(
-        rows, "vec_id long, qv array<bigint>"
-    ).createOrReplaceTempView(vsq2)
-    try:
-        sep1b, sep2b = both_vs_separate(vsq2)
-    finally:
-        spark.catalog.dropTempView(vsq2)
-    assert sep1b, "fixture (b) plants no np1 decisions"
-    # np2 genuinely adds the straddler decisions, and the merged pass
-    # reproduced them (got2 == sep2 above)
-    assert sep2b - sep1b, "fixture (b) has no np2-only decisions"
+        rows_b.append((a, vec((0, 120), (2, 3))))
+        rows_b.append((b, vec((0, 120), (2, 4))))
+    want1b, want2b = check(rows_b)
+    assert want1b, "fixture (b) plants no np1 decisions"
+    # np2 genuinely adds the straddler decisions, and the single pass
+    # reproduced them (got2 == want2 above)
+    assert want2b - want1b, "fixture (b) has no np2-only decisions"

@@ -55,6 +55,33 @@ def test_cli_sqlite_backend_end_to_end(spark, tmp_path, capsys):
     assert "secret" not in upd["payload"], "redaction must apply in the CLI path"
 
 
+def test_cli_once_restores_signal_handlers(spark, tmp_path):
+    """main() installs SIGINT/SIGTERM graceful-stop handlers; an
+    in-process --once drain must hand the host's own handlers back."""
+    import signal
+
+    db_path = str(tmp_path / "app.db")
+    conn = sqlite3.connect(db_path)
+    conn.execute("CREATE TABLE notes (id INTEGER PRIMARY KEY)")
+    conn.commit()
+    conn.close()
+
+    def host_handler(*_):
+        pass
+
+    sigs = (signal.SIGINT, signal.SIGTERM)
+    saved = {s: signal.signal(s, host_handler) for s in sigs}
+    try:
+        rc = main(["--connect", f"sqlite:{db_path}", "--tables", "notes",
+                   "--out", "-", "--once"])
+        after = {s: signal.getsignal(s) for s in sigs}
+    finally:
+        for s, h in saved.items():
+            signal.signal(s, h)
+    assert rc == 0
+    assert after == {s: host_handler for s in sigs}
+
+
 def test_cli_remove_exits_without_capture(tmp_path):
     db_path = str(tmp_path / "app.db")
     conn = sqlite3.connect(db_path)

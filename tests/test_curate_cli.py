@@ -766,7 +766,8 @@ def test_curate_stream_semantic_within_batch_and_mixed_history(
 def test_curate_semantic_megacell_bounded(spark):
     """Round 14 (VERDICT r13 what's-wrong #1): the batch CLI's
     semantic dedup runs the certified capped/skew-chunked GEMM chain
-    (`_semdedup_spark_df`), not a per-pair interpreted HOF join — a
+    (`_semdedup_spark_df` at nprobe=1, the same builder q_pairwise
+    runs at nprobe=2), not a per-pair interpreted HOF join — a
     planted mega-cell (9000 docs whose identical embeddings collapse
     into ONE k-means cell, ~40M candidate pairs) completes in bounded
     time (the old zip_with-per-pair join materialized the pair

@@ -869,13 +869,15 @@ def test_ts_dtype_memo_key_sees_inplace_part_rewrite(tmp_path):
     part.write_bytes(b"x" * 16)
     k1 = _stat_signature(str(d))
     assert k1 is not None
+    st = os.stat(d)
 
     # in-place rewrite of the SAME part-file: same name, same size,
     # top-level dir mtime unchanged — only the recursive max mtime moves
     _t.sleep(0.01)
     part.write_bytes(b"y" * 16)
-    os.utime(d)  # normalize: even if the OS touched the dir, the
-    # part-file mtime alone must already differ
+    # pin the top-level dir's mtime to its original value, so only the
+    # part-file's recursive mtime can make k2 differ from k1
+    os.utime(d, ns=(st.st_atime_ns, st.st_mtime_ns))
     k2 = _stat_signature(str(d))
     assert k2 != k1, "in-place part rewrite must change the memo key"
 
@@ -888,3 +890,25 @@ def test_ts_dtype_memo_key_sees_inplace_part_rewrite(tmp_path):
     # single FILE path keeps the plain (mtime, size) signature
     kf = _stat_signature(str(part))
     assert kf is not None and len(kf) == 3
+
+
+def test_stream_drain_restores_conf_when_start_fails(spark, monkeypatch):
+    """The drain scopes AQE parallelism-first coalescing on; a
+    writeStream.start() that raises must still leave the session conf
+    as it found it."""
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
+    from pqstream_spark.queries.streaming_q import _run_to_completion
+    from pqstream_spark.session import scoped_conf
+
+    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+
+    def _fail(self, *a, **k):
+        raise RuntimeError("start failed")
+
+    monkeypatch.setattr(DataStreamWriter, "start", _fail)
+    df = spark.readStream.format("rate").load()
+    with scoped_conf(spark, {key: "false"}):
+        with pytest.raises(RuntimeError, match="start failed"):
+            _run_to_completion(df, "append")
+        assert spark.conf.get(key) == "false"

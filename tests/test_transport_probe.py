@@ -150,8 +150,8 @@ def test_transport_packages_probe():
         "framing gap for F3/K2 is no longer excused. grpc -> add a "
         "Listen gRPC method over the same Dispatcher + renderer as "
         "streaming/wire_http.py (nothing below the framing changes); "
-        "kafka -> replace kafka_writer's plan-only path with a real "
-        "producer; stomp package -> optionally swap streaming/stomp_wire "
+        "kafka -> add a Kafka sink beside StompForwarder in "
+        "streaming/sinks.py; stomp package -> optionally swap streaming/stomp_wire "
         "for it (the stdlib client already speaks 1.2), "
         "then delete this assert."
     )

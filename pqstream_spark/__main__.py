@@ -4,9 +4,10 @@ Mirrors the reference daemon's flag surface (`pqsd`,
 /root/reference/cmd/pqsd/main.go:30-42):
 
     -connect      → --connect   source: `sqlite:PATH` (local capture
-                                backend: triggers + outbox + poller) or
-                                a changelog parquet directory (file
-                                source micro-batches)
+                                backend: triggers + outbox + poller),
+                                `postgres:CONNINFO` (live Postgres
+                                capture) or a changelog parquet
+                                directory (file source micro-batches)
     -tables       → --tables    server-level table regexp (which tables
                                 get captured / pass the filter)
     -redactions   → --redactions JSON redaction config, same shape as
@@ -22,11 +23,37 @@ Mirrors the reference daemon's flag surface (`pqsd`,
     -remove       → --remove    remove capture triggers and exit
     (new)           --once      drain available data then exit (smoke/
                                 batch mode; without it the daemon runs
-                                until SIGINT, graceful-stop parity with
-                                main.go:113-118)
+                                until SIGINT/SIGTERM, graceful-stop
+                                parity with main.go:113-118)
 
 Startup order matches pqsd: remove-then-install triggers, then serve
-(cmd/pqsd/main.go:95-112).
+(cmd/pqsd/main.go:95-112). Every polled backend then runs the same
+loop (`_serve`): poll → handle_events → emit → commit.
+
+Backends (`_backend`): `sqlite:` is sqlite; `postgres:` is outbox or
+notify (`--transport`), or with `--transport logical` one of logical
+(test_decoding), pgoutput (`--plugin pgoutput`) and sharded (pgoutput
+with `--shards N`); anything else is dir. Backend-specific flags and
+the backends that read them (`_FLAGS`); `_dispatch` rejects any other
+combination with exit code 2 before anything is touched:
+
+    flag              sqlite outbox notify logical pgoutput sharded dir
+    --remove            x      x      x      x       x        x
+    --consumer          x      x             x       x        x
+    --bootstrap         x      x             x       x        x
+    --lag               x      x             x       x        x
+    --compact           x      x
+    --replay-from       x      x
+    --parallel-read            x
+    --txn-consistent           x
+    --slot                                   x       x        x
+    --spill-dir                              x       x        x
+    --spool-mode                             x       x        x
+    --rebootstrap                            x       x        x
+    --publication                                    x        x
+    --shards                                                  x
+    --checkpoint                                                     x
+    --listen-http                                                    x
 """
 
 from __future__ import annotations
@@ -34,6 +61,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import signal
 import sys
 import threading
@@ -239,110 +267,269 @@ def _load_redactions(arg: str):
     return decode_redactions(arg)
 
 
-def _emit(batch_df, out: str, epoch: int) -> None:
-    from .streaming.sinks import event_to_json_line, jsonl_dir_writer
+BACKENDS = ("sqlite", "outbox", "notify", "logical", "pgoutput", "sharded",
+            "dir")
+_SLOT = ("logical", "pgoutput", "sharded")  # replication-slot decoding
+_OFFSET = ("sqlite", "outbox", *_SLOT)  # durable consumer offsets
+_CAPTURE = (*_OFFSET, "notify")  # install capture in the source database
 
+
+def _backend(args: argparse.Namespace) -> str:
+    """The capture backend `args` select (one of BACKENDS)."""
+    if args.connect.startswith("sqlite:"):
+        return "sqlite"
+    if not args.connect.startswith("postgres:"):
+        return "dir"
+    if args.transport != "logical":
+        return args.transport
+    if args.plugin != "pgoutput":
+        return "logical"
+    return "pgoutput" if args.shards is None else "sharded"
+
+
+_NO_SLOT = ("only the logical transport (--transport logical) decodes a "
+            "replication slot")
+
+# Backend-specific flags: the backends that read each one, and why the
+# others do not. A flag given to any other backend is rejected up front
+# instead of being silently ignored.
+_FLAGS: dict[str, tuple[tuple[str, ...], str]] = {
+    "--tables": (BACKENDS, ""),
+    "--once": (BACKENDS, ""),
+    "--remove": (_CAPTURE, "the directory backend installs no capture"),
+    "--consumer": (_OFFSET, "NOTIFY and the directory backend keep no "
+                   "named consumer offset (NOTIFY has no cursor, offsets, "
+                   "or replay)"),
+    "--bootstrap": (_OFFSET, "NOTIFY has no cursor to switch over to, and "
+                    "the directory backend re-reads its whole changelog"),
+    "--lag": (_OFFSET, "the NOTIFY wire and the directory backend keep no "
+              "server-side consumer offsets to measure"),
+    "--compact": (("sqlite", "outbox"), "only an outbox table is pruned; a "
+                  "replication slot releases WAL retention by advancing"),
+    "--replay-from": (("sqlite", "outbox"), "a replication slot cannot "
+                      "rewind (confirmed_flush_lsn is monotone; replay = new "
+                      "slot + --bootstrap), NOTIFY has no cursor, and the "
+                      "directory backend replays by removing --checkpoint"),
+    "--parallel-read": (("outbox",), "only the postgres outbox has a "
+                        "seq-partitionable server-side table (WAL decode "
+                        "order is inherently serial)"),
+    "--txn-consistent": (("outbox",), "logical batches are "
+                         "transaction-atomic by construction "
+                         "(pg_logical_slot_peek_changes only stops at "
+                         "commit boundaries); the other backends carry no "
+                         "writer xid"),
+    "--slot": (_SLOT, _NO_SLOT),
+    "--spill-dir": (_SLOT, _NO_SLOT),
+    "--spool-mode": (_SLOT, _NO_SLOT),
+    "--rebootstrap": (_SLOT, _NO_SLOT),
+    "--publication": (("pgoutput", "sharded"), "publications belong to the "
+                      "pgoutput plugin (--plugin pgoutput)"),
+    "--shards": (("sharded",), "sharding scopes decode via publications — "
+                 "pgoutput only (--transport logical --plugin pgoutput)"),
+    "--checkpoint": (("dir",), "the polled backends persist their offset "
+                     "inside the source database"),
+    "--listen-http": (("dir",), "the Listen wire serves the directory "
+                      "backend only"),
+}
+
+# Value checks and flag pairings, applied after _FLAGS.
+_CHECKS = (
+    # 0 would be falsy at the read-path choice and silently fall back to
+    # the serial read — the operator must not believe the scale path is
+    # active when it is not
+    (lambda a: a.parallel_read is not None and a.parallel_read < 1,
+     "--parallel-read: N must be >= 1 (got {a.parallel_read})"),
+    (lambda a: a.fence_wait < 0,
+     "--fence-wait: must be >= 0 (got {a.fence_wait})"),
+    (lambda a: a.shards is not None and a.shards < 1,
+     "--shards: N must be >= 1 (got {a.shards})"),
+    (lambda a: a.spool_mode and a.spill_dir is None,
+     "--spool-mode needs --spill-dir (the spool directory is the durable "
+     "copy of drained WAL)"),
+    (lambda a: a.txn_consistent and a.parallel_read is not None,
+     "--txn-consistent reads the envelope xid driver-side "
+     "(read_batch_txn); it does not compose with --parallel-read"),
+)
+
+
+def _flag_error(args: argparse.Namespace, backend: str) -> str | None:
+    for flag, (readers, why) in _FLAGS.items():
+        value = getattr(args, flag[2:].replace("-", "_"))
+        # identity, not `in (None, False)`: 0 == False would let
+        # --replay-from 0 through
+        if backend not in readers and value is not None and value is not False:
+            return f"{flag} does not apply to the {backend} backend: {why}"
+    for bad, message in _CHECKS:
+        if bad(args):
+            return message.format(a=args)
+    return None
+
+
+class _Stop(threading.Event):
+    """The daemon's graceful-stop flag; main() installs it as the
+    SIGINT/SIGTERM handler."""
+
+    def __call__(self, signum, frame) -> None:
+        self.set()
+
+
+def _spark(stop: threading.Event):
+    """The daemon's Spark session. Creating the SparkContext installs
+    pyspark's own SIGINT handler, which cancels jobs and raises
+    KeyboardInterrupt (pyspark/core/context.py); when main() owns the
+    handler (`stop` is installed), it goes back in, so SIGINT drains
+    the in-flight batch like SIGTERM does."""
+    from . import session
+
+    owned = signal.getsignal(signal.SIGINT) is stop
+    spark = session.get_spark("pqstream-daemon")
+    if owned and threading.current_thread() is threading.main_thread():
+        signal.signal(signal.SIGINT, stop)
+    return spark
+
+
+def _print_batch(batch_df, epoch: int) -> None:
+    """`--out -`: one JSON line per event on stdout, in seq order."""
+    from .streaming.sinks import event_to_json_line
+
+    for r in batch_df.orderBy("seq").toLocalIterator():
+        print(event_to_json_line(r.asDict()), flush=True)
+
+
+def _sink(out: str, prefix: str = "batch"):
+    """The polled backends' writer: stdout, or one seq-named file per
+    batch (`{prefix}-{lo}-{hi}.jsonl`) that a replayed batch rewrites
+    in place — with the durable offset, exactly-once effect."""
     if out == "-":
-        for r in batch_df.orderBy("seq").toLocalIterator():
-            print(event_to_json_line(r.asDict()), flush=True)
-    else:
-        jsonl_dir_writer(out)(batch_df, epoch)
+        return _print_batch
+    from .streaming import sinks
+
+    return sinks.jsonl_seq_writer(out, prefix=prefix)
+
+
+def _handle(batch, redactions):
+    """Outbox-shaped batch → handled events. typed_wire: the CLI is a
+    wire sink — render jsonpb-faithful typed JSON (numbers/nulls
+    preserved), like the reference pays serialization cost exactly
+    once at the notify/print boundary."""
+    from . import pipeline
+    from .sources.outbox_local import raw_events_from_outbox
+
+    return pipeline.handle_events(
+        raw_events_from_outbox(batch), redactions=redactions,
+        typed_wire=True,
+    )
+
+
+def _emit_snapshot(args, emit, redactions, snap_batch, epoch: int = -1,
+                   stale=lambda f: f.startswith("batch--")) -> None:
+    """Sink a `--bootstrap` snapshot (negative seqs). The snapshot owns
+    the negative-seq file namespace: a crashed earlier bootstrap may
+    have left a snapshot of a different size (different seq range =
+    different filename), which re-emitting would not overwrite — so
+    the `stale` files go first."""
+    snap = _handle(snap_batch, redactions)
+    if args.out != "-":
+        for f in os.listdir(args.out):
+            if stale(f):
+                os.remove(os.path.join(args.out, f))
+    emit(snap, epoch)
+
+
+def _serve(args, stop: threading.Event, emit, redactions, poll, commit,
+           compact=None, pause: bool = True) -> int:
+    """The one poll loop of every polled backend. `poll()` returns
+    `(batch, drained)`; `commit()` runs only after the batch is sunk,
+    so a crash in between replays it (at-least-once; the seq-named
+    sink rewrites the same file). `--once` stops at the first drained
+    poll; otherwise the loop waits `--poll-interval` between polls
+    (`pause=False`: the transport's poll waits itself)."""
+    epoch = 0
+    while not stop.is_set():
+        batch, drained = poll()
+        emit(_handle(batch, redactions), epoch)
+        commit()
+        if args.compact:
+            compact()
+        epoch += 1
+        if args.once:
+            if drained:
+                break
+        elif pause:
+            stop.wait(args.poll_interval)
+    return 0
+
+
+def _outbox_poll(poller, read):
+    """poll() for the outbox pollers: drained exactly when the read
+    window was empty (`_pending_hi is None`), so no poll pays a Spark
+    job to count rows. A postgres batch that only advanced over abort
+    gaps has _pending_hi set with zero rows — the loop runs one extra
+    (cheap, empty) iteration and terminates on the next poll when the
+    watermark stops moving; counting rows instead would re-run all N
+    psql sub-range reads on the --parallel-read path."""
+    def poll():
+        batch = read()
+        return batch, poller._pending_hi is None
+
+    return poll
 
 
 def _run_sqlite(args, stop: threading.Event) -> int:
     import sqlite3
 
-    from .pipeline import handle_events
-    from .session import get_spark
-    from .sources.outbox_local import (
-        LocalCaptureManager,
-        LocalOutboxPoller,
-        raw_events_from_outbox,
-    )
+    from .sources import outbox_local
 
-    path = args.connect[len("sqlite:"):]
-    conn = sqlite3.connect(path)
-    cap = LocalCaptureManager(conn, table_regexp=args.tables)
+    conn = sqlite3.connect(args.connect[len("sqlite:"):])
+    cap = outbox_local.LocalCaptureManager(conn, table_regexp=args.tables)
     cap.remove()  # remove-then-install (cmd/pqsd/main.go:95-102)
     if args.remove:
         return 0
     tables = cap.install()
     print(f"capturing {len(tables)} tables: {tables}", file=sys.stderr)
 
-    spark = get_spark("pqstream-daemon")
+    spark = _spark(stop)
     redactions = _load_redactions(args.redactions)
     # the offset lives next to the outbox: restart (even after SIGKILL)
     # resumes from the last advanced seq; a batch emitted but not yet
     # advanced replays, and the seq-named idempotent sink rewrites the
     # same file — exactly-once effect end to end
-    poller = LocalOutboxPoller.open_durable(
+    poller = outbox_local.LocalOutboxPoller.open_durable(
         conn, consumer=args.consumer or "daemon")
     if args.replay_from is not None:
         poller.rewind(args.replay_from)
-    if args.out == "-":
-        emit = lambda df, ep: _emit(df, "-", ep)  # noqa: E731
-    else:
-        from .streaming.sinks import jsonl_seq_writer
+    emit = _sink(args.out)
+    if args.bootstrap and not outbox_local.bootstrap_done(conn):
+        # Consistent switchover point: the snapshot reflects every
+        # write up to `hi`, so the changelog must resume AFTER hi
+        # or snapshot and changelog both deliver the same row.
+        # BEGIN IMMEDIATE blocks concurrent writers between the
+        # snapshot read and the high-water capture.
+        conn.execute("BEGIN IMMEDIATE")
+        snap_batch = outbox_local.snapshot_batch(conn, spark, args.tables)
+        hi = conn.execute(
+            "SELECT COALESCE(MAX(seq), 0) FROM pqstream_outbox"
+        ).fetchone()[0]
+        conn.commit()
+        _emit_snapshot(args, emit, redactions, snap_batch)
+        poller.rewind(hi)
+        # marked only after the snapshot is durably sunk: a crash
+        # in between re-bootstraps, idempotently
+        outbox_local.mark_bootstrap_done(conn)
+    return _serve(args, stop, emit, redactions,
+                  _outbox_poll(poller, lambda: poller.read_batch(spark)),
+                  poller.advance, poller.compact)
 
-        emit = jsonl_seq_writer(args.out)
-    if args.bootstrap:
-        from .sources.outbox_local import (
-            bootstrap_done,
-            mark_bootstrap_done,
-            snapshot_batch,
-        )
 
-        if not bootstrap_done(conn):
-            # Consistent switchover point: the snapshot reflects every
-            # write up to `hi`, so the changelog must resume AFTER hi
-            # or snapshot and changelog both deliver the same row.
-            # BEGIN IMMEDIATE blocks concurrent writers between the
-            # snapshot read and the high-water capture.
-            conn.execute("BEGIN IMMEDIATE")
-            snap_batch = snapshot_batch(conn, spark, args.tables)
-            hi = conn.execute(
-                "SELECT COALESCE(MAX(seq), 0) FROM pqstream_outbox"
-            ).fetchone()[0]
-            conn.commit()
-            snap = handle_events(
-                raw_events_from_outbox(snap_batch),
-                redactions=redactions,
-                typed_wire=True,
-            )
-            if args.out != "-":
-                # the snapshot owns the negative-seq file namespace: a
-                # crashed earlier bootstrap may have left a snapshot of
-                # a different size (different seq range = different
-                # filename), which re-emitting would not overwrite
-                for f in os.listdir(args.out):
-                    if f.startswith("batch--"):
-                        os.remove(os.path.join(args.out, f))
-            emit(snap, -1)
-            poller.rewind(hi)
-            # marked only after the snapshot is durably sunk: a crash
-            # in between re-bootstraps, idempotently
-            mark_bootstrap_done(conn)
-    epoch = 0
-    while not stop.is_set():
-        batch = poller.read_batch(spark)
-        # typed_wire: the CLI is a wire sink — render jsonpb-faithful
-        # typed JSON (numbers/nulls preserved), like the reference pays
-        # serialization cost exactly once at the notify/print boundary
-        events = handle_events(
-            raw_events_from_outbox(batch), redactions=redactions,
-            typed_wire=True,
-        )
-        emit(events, epoch)
-        poller.advance()
-        if args.compact:
-            poller.compact()
-        epoch += 1
-        if args.once:
-            if batch.isEmpty():
-                break
-        else:
-            stop.wait(args.poll_interval)
-    return 0
+def _remove_pg_triggers(runner, tables: str | None) -> None:
+    """Remove both trigger transports' capture (outbox and NOTIFY): a
+    daemon restarted with a different --transport must not leave
+    orphaned capture firing into an unconsumed outbox (or an
+    unlistened channel) forever."""
+    from .sources.outbox_pg import PgCaptureManager, PgNotifyCaptureManager
+
+    PgCaptureManager(runner, table_regexp=tables).remove()
+    PgNotifyCaptureManager(runner, table_regexp=tables).remove()
 
 
 def _run_postgres(args, stop: threading.Event) -> int:
@@ -351,65 +538,32 @@ def _run_postgres(args, stop: threading.Event) -> int:
     the triggers are the golden-pinned PL/pgSQL executing inside a real
     server and the durable offset row lives in the source database —
     matching the reference's deployment (pqsd against live PG,
-    cmd/pqsd/main.go:95-112) with the at-least-once outbox upgrade."""
-    from .pipeline import handle_events
-    from .session import get_spark
-    from .sources.outbox_local import raw_events_from_outbox
-    from .sources.outbox_pg import (
-        PgCaptureManager,
-        PgOutboxPoller,
-        PsqlRunner,
-        pg_bootstrap_done,
-        pg_mark_bootstrap_done,
-        pg_outbox_high_water,
-        pg_snapshot_batch,
-    )
+    cmd/pqsd/main.go:95-112) with the at-least-once outbox upgrade.
+    The other transports branch off here."""
+    from .sources import outbox_pg
 
-    conninfo = args.connect[len("postgres:"):]
-    runner = PsqlRunner(conninfo)
-    if args.transport == "notify":
+    runner = outbox_pg.PsqlRunner(args.connect[len("postgres:"):])
+    backend = _backend(args)
+    if backend == "notify":
         return _run_postgres_notify(args, stop, runner)
-    if args.transport == "logical":
+    if backend != "outbox":
         return _run_postgres_logical(args, stop, runner)
-    if (args.spill_dir is not None or args.spool_mode
-            or args.rebootstrap or args.shards is not None):
-        print("--spill-dir/--spool-mode/--rebootstrap/--shards apply to "
-              "the logical transport only (--transport logical)",
-              file=sys.stderr)
-        return 2
-    if args.txn_consistent and args.parallel_read:
-        print("--txn-consistent reads the envelope xid driver-side "
-              "(read_batch_txn); it does not compose with "
-              "--parallel-read", file=sys.stderr)
-        return 2
-    cap = PgCaptureManager(runner, table_regexp=args.tables)
-    # remove-then-install (cmd/pqsd/main.go:95-102) — including the
-    # OTHER transport's triggers: a daemon restarted with a different
-    # --transport must not leave orphaned capture firing into an
-    # unconsumed outbox (or an unlistened channel) forever
-    from .sources.outbox_pg import PgNotifyCaptureManager
-
-    cap.remove()
-    PgNotifyCaptureManager(runner, table_regexp=args.tables).remove()
+    cap = outbox_pg.PgCaptureManager(runner, table_regexp=args.tables)
+    _remove_pg_triggers(runner, args.tables)  # remove-then-install
     if args.remove:
         return 0
     tables = cap.install()
     print(f"capturing {len(tables)} tables: {tables}", file=sys.stderr)
 
-    spark = get_spark("pqstream-daemon")
+    spark = _spark(stop)
     redactions = _load_redactions(args.redactions)
-    poller = PgOutboxPoller.open_durable(
+    poller = outbox_pg.PgOutboxPoller.open_durable(
         runner, consumer=args.consumer or "daemon",
         fence_wait=args.fence_wait)
     if args.replay_from is not None:
         poller.rewind(args.replay_from)
-    if args.out == "-":
-        emit = lambda df, ep: _emit(df, "-", ep)  # noqa: E731
-    else:
-        from .streaming.sinks import jsonl_seq_writer
-
-        emit = jsonl_seq_writer(args.out)
-    if args.bootstrap and not pg_bootstrap_done(runner):
+    emit = _sink(args.out)
+    if args.bootstrap and not outbox_pg.pg_bootstrap_done(runner):
         # consistent switchover: the high-water mark is the FENCED safe
         # ceiling (PgSeqFence), never the visible MAX(seq) — rewinding
         # past a seq an in-flight writer could still commit below would
@@ -418,55 +572,25 @@ def _run_postgres(args, stop: threading.Event) -> int:
         # contract and seq-dedup downstream already absorb (same stance
         # as the sqlite backend's BEGIN IMMEDIATE, weakened to
         # at-least-once)
-        hi = pg_outbox_high_water(runner, fence_wait=args.fence_wait)
-        snap_batch = pg_snapshot_batch(runner, spark, args.tables)
-        snap = handle_events(
-            raw_events_from_outbox(snap_batch),
-            redactions=redactions, typed_wire=True,
-        )
-        if args.out != "-":
-            for f in os.listdir(args.out):
-                if f.startswith("batch--"):
-                    os.remove(os.path.join(args.out, f))
-        emit(snap, -1)
+        hi = outbox_pg.pg_outbox_high_water(runner,
+                                            fence_wait=args.fence_wait)
+        _emit_snapshot(args, emit, redactions,
+                       outbox_pg.pg_snapshot_batch(runner, spark, args.tables))
         poller.rewind(hi)
-        pg_mark_bootstrap_done(runner)
-    assembler = None
-    if args.txn_consistent:
-        from .sources.outbox_pg import TxnAssembler
+        outbox_pg.pg_mark_bootstrap_done(runner)
 
-        assembler = TxnAssembler()
+    commit = poller.advance
+    if args.txn_consistent:
+        assembler = outbox_pg.TxnAssembler()
         # xid-extent index at STARTUP, never inside a poll (CREATE
         # INDEX queues behind open writers — a mid-poll creation would
         # wedge the loop exactly when transactions are in flight)
         poller.ensure_xid_index()
-    epoch = 0
-    while not stop.is_set():
-        if assembler is not None:
-            raw = poller.read_batch_txn(spark)
-            batch = assembler.feed(raw).drop("xid")
-        elif args.parallel_read:
-            batch = poller.read_batch_distributed(
-                spark, num_partitions=args.parallel_read
-            )
-        else:
-            batch = poller.read_batch(spark)
-        # drained-check: _pending_hi is None exactly when the fenced
-        # window is empty (hi <= lo). A batch that only advanced over
-        # abort gaps has _pending_hi set with zero rows — the loop
-        # runs one extra (cheap, empty) iteration and terminates on
-        # the next poll when the watermark stops moving; checking row
-        # counts instead would re-run all N psql sub-range reads on
-        # the distributed path
-        batch_empty = poller._pending_hi is None
-        events = handle_events(
-            raw_events_from_outbox(batch), redactions=redactions,
-            typed_wire=True,
-        )
-        emit(events, epoch)
-        if assembler is None:
-            poller.advance()
-        else:
+
+        def read():
+            return assembler.feed(poller.read_batch_txn(spark)).drop("xid")
+
+        def commit():
             # transaction-consistent durability: the read cursor moves
             # batch by batch, but the PERSISTED offset stays below the
             # lowest seq the assembler still holds (pending_floor) — a
@@ -478,596 +602,402 @@ def _run_postgres(args, stop: threading.Event) -> int:
             floor = assembler.pending_floor()
             poller.persist_at(
                 poller.last_seq if floor is None else floor - 1)
-        if args.compact:
-            poller.compact()
-        epoch += 1
-        if args.once:
-            if batch_empty:
-                break
-        else:
-            stop.wait(args.poll_interval)
-    return 0
+    elif args.parallel_read:
+        def read():
+            return poller.read_batch_distributed(
+                spark, num_partitions=args.parallel_read)
+    else:
+        def read():
+            return poller.read_batch(spark)
+
+    return _serve(args, stop, emit, redactions, _outbox_poll(poller, read),
+                  commit, poller.compact)
 
 
 def _run_postgres_notify(args, stop: threading.Event, runner) -> int:
     """`--transport notify`: the reference's own data path, live —
     pqsd's remove-then-install of the NOTIFY trigger, one LISTEN
     session, envelopes handled per micro-batch. At-most-once by
-    design: no offsets, no replay (the flags that imply durability
-    are rejected up front rather than silently ignored)."""
-    from .pipeline import handle_events
-    from .session import get_spark
+    design: no offsets, no replay (_dispatch rejects the flags that
+    imply durability rather than silently ignoring them)."""
+    import time
+
     from .sources.notify_pg import NotifyListener
-    from .sources.outbox_local import raw_events_from_outbox
     from .sources.outbox_pg import PgNotifyCaptureManager
 
-    for flag, name in ((args.replay_from is not None, "--replay-from"),
-                       (args.compact, "--compact"),
-                       (args.bootstrap, "--bootstrap"),
-                       (args.consumer is not None, "--consumer"),
-                       (args.txn_consistent, "--txn-consistent"),
-                       (args.spool_mode, "--spool-mode"),
-                       (args.shards is not None, "--shards"),
-                       (args.rebootstrap, "--rebootstrap"),
-                       (args.spill_dir is not None, "--spill-dir")):
-        if flag:
-            print(f"{name} requires the durable outbox transport "
-                  "(NOTIFY has no cursor, offsets, or replay)",
-                  file=sys.stderr)
-            return 2
-    from .sources.outbox_pg import PgCaptureManager as _OutboxCap
-
-    cap = PgNotifyCaptureManager(runner, table_regexp=args.tables)
-    # remove BOTH transports' triggers (see _run_postgres): an outbox
-    # trigger left behind by a previous run would keep filling
-    # pqstream_outbox with no consumer
-    cap.remove()
-    _OutboxCap(runner, table_regexp=args.tables).remove()
+    _remove_pg_triggers(runner, args.tables)
     if args.remove:
         return 0
-    tables = cap.install()
+    tables = PgNotifyCaptureManager(runner, table_regexp=args.tables).install()
     print(f"NOTIFY capture on {len(tables)} tables: {tables}",
           file=sys.stderr)
 
-    spark = get_spark("pqstream-daemon")
+    spark = _spark(stop)
     redactions = _load_redactions(args.redactions)
-    if args.out == "-":
-        emit = lambda df, ep: _emit(df, "-", ep)  # noqa: E731
-    else:
-        import time as _time
-
-        from .streaming.sinks import jsonl_seq_writer
-
-        # per-run prefix: notify seqs are session-local (restart at 1
-        # per listener), so seq-named files would collide across
-        # daemon restarts and overwrite earlier output
-        emit = jsonl_seq_writer(
-            args.out, prefix=f"notify-{int(_time.time() * 1000):x}"
-        )
-    conninfo = args.connect[len("postgres:"):]
-    epoch = 0
-    with NotifyListener(conninfo) as lis:
-        while not stop.is_set():
+    # per-run prefix: notify seqs are session-local (restart at 1 per
+    # listener), so seq-named files would collide across daemon
+    # restarts and overwrite earlier output
+    emit = _sink(args.out, prefix=f"notify-{int(time.time() * 1000):x}")
+    with NotifyListener(runner.conninfo) as lis:
+        def poll():
             payloads = lis.poll(timeout=args.poll_interval)
-            batch = lis.batch_df(spark, payloads)
-            events = handle_events(
-                raw_events_from_outbox(batch), redactions=redactions,
-                typed_wire=True,
-            )
-            emit(events, epoch)
-            epoch += 1
-            if args.once and not payloads:
-                break
-    return 0
+            return lis.batch_df(spark, payloads), not payloads
+
+        return _serve(args, stop, emit, redactions, poll,
+                      commit=lambda: None, pause=False)
+
+
+def _logical_preconditions(runner, cap) -> bool:
+    """Every install precondition of the logical transport, checked
+    BEFORE any destructive step: removing the other transports'
+    triggers and THEN failing install (wal_level=replica, an empty
+    table set, a cluster-global slot owned by another database) would
+    leave the database with no capture at all — every write until the
+    operator re-runs would be lost."""
+    wal_level = runner.scalar("SHOW wal_level")
+    if wal_level != "logical":
+        print(f"--transport logical needs wal_level=logical (server "
+              f"has {wal_level!r}); existing capture left untouched",
+              file=sys.stderr)
+        return False
+    try:
+        if not cap.discover_tables():
+            print("no tables match the table regexp; existing "
+                  "capture left untouched", file=sys.stderr)
+            return False
+        if hasattr(cap, "_slot_exists"):
+            cap._slot_exists()  # raises on foreign-database slot
+    except Exception as exc:  # noqa: BLE001 — loud, pre-destructive
+        print(f"logical install precondition failed: {exc}; "
+              "existing capture left untouched", file=sys.stderr)
+        return False
+    return True
+
+
+_HEALTHY = (None, "reserved", "extended")  # healthy slot wal_status values
+
+
+def _slot_rows(runner, where: str) -> list[dict]:
+    """The logical slots matching `where`, with their lag columns.
+    insert_lsn, not wal_lsn: async-committed WAL sitting in
+    wal_buffers has not moved the WRITE position yet, and lag must
+    count it. wal_status/safe_wal_size: the abandoned-slot footgun — a
+    slot whose consumer stopped polling retains WAL forever and fills
+    the source disk; 'unreserved'/'lost' means max_slot_wal_keep_size
+    pressure is already discarding (or about to discard) the slot's
+    WAL, and the operator must drain or remove() it."""
+    return runner.query_csv(
+        "SELECT slot_name, active::text AS active, "
+        "(pg_current_wal_insert_lsn() - confirmed_flush_lsn)::bigint "
+        "AS wal_bytes_pending, "
+        "(pg_current_wal_insert_lsn() - restart_lsn)::bigint "
+        "AS wal_bytes_retained, "
+        "wal_status, safe_wal_size "
+        "FROM pg_replication_slots WHERE slot_type = 'logical' "
+        f"AND {where} ORDER BY slot_name"
+    )
+
+
+def _slot_record(r: dict) -> dict:
+    return {
+        "slot": r["slot_name"],
+        "active": r["active"] in ("t", "true"),
+        "wal_bytes_pending": int(r["wal_bytes_pending"] or 0),
+        "wal_bytes_retained": int(r["wal_bytes_retained"] or 0),
+        "wal_status": r["wal_status"],
+        "safe_wal_size": (
+            int(r["safe_wal_size"]) if r["safe_wal_size"] is not None
+            else None
+        ),
+    }
+
+
+def _drop_lost_slot(runner, slot: str, marker: str) -> bool:
+    """`--rebootstrap` slot-loss recovery: wal_status='lost' means
+    max_slot_wal_keep_size pressure discarded WAL this slot still
+    needed — its unconsumed changes are GONE and the stream is dead
+    (decode errors on the next peek). The recovery is the bootstrap
+    machinery re-run: drop the dead slot and clear its bootstrap
+    sentinel `marker`, so the exported-snapshot session re-snapshots
+    the table state INCLUDING every change the lost WAL carried and
+    the fresh slot decodes exactly what commits after it (disjoint,
+    exactly-once switchover). Seq anchors are kept: they describe rows
+    already durably sunk, and the new slot's commit LSNs are strictly
+    beyond the stored anchor. Returns whether the slot was lost."""
+    from .sources.outbox_pg import PG_OFFSET_TABLE, _quote_lit
+
+    rows = _slot_rows(runner, f"slot_name = {_quote_lit(slot)}")
+    if not rows or rows[0]["wal_status"] != "lost":
+        return False
+    print(f"slot {slot!r} is LOST (WAL retention pressure); "
+          "rebootstrapping: drop slot -> exported-snapshot slot -> "
+          "snapshot + changelog", file=sys.stderr)
+    runner.sql(f"SELECT pg_drop_replication_slot({_quote_lit(slot)});")
+    # clear the sentinel so the snapshot re-runs (check=False: a
+    # first-ever run has no offset table yet)
+    runner.sql(
+        f"DELETE FROM {PG_OFFSET_TABLE} "
+        f"WHERE consumer = {_quote_lit(marker)};",
+        check=False)
+    return True
+
+
+def _snapshot_session(runner, mgr, slot: str, marker: str, plugin: str):
+    """Exactly-once bootstrap anchor: when a snapshot is owed (`marker`
+    unset) AND the slot does not exist yet, create the slot over the
+    walsender with an EXPORTED snapshot at its consistent point —
+    snapshot ∪ changelog then partition history DISJOINTLY (no overlap
+    for downstream to absorb). Identity and publication are applied
+    first (create_slot=False) so the first decoded UPDATE already
+    carries the complete old tuple. Returns the open session, or None
+    when no snapshot is owed or the slot already exists (including a
+    crash between an earlier exported-snapshot session and the
+    sentinel write — the session died, the slot persisted): the
+    snapshot then falls back to the at-least-once overlap stance."""
+    from .sources.logical_pg import SlotSnapshotSession
+    from .sources.outbox_pg import pg_bootstrap_done
+
+    if pg_bootstrap_done(runner, marker) or mgr._slot_exists():
+        return None
+    mgr.install(create_slot=False)
+    return SlotSnapshotSession(runner.conninfo, slot, plugin=plugin).__enter__()
+
+
+def _warn_retention(health: list[dict]) -> None:
+    """Slot retention health at startup: an 'unreserved'/'lost' slot
+    means max_slot_wal_keep_size pressure already discarded (or is
+    about to discard) WAL this consumer needs — surfaced loudly
+    instead of failing later with a decode error."""
+    for h in health:
+        if h.get("wal_status") not in _HEALTHY:
+            print(f"WARNING: slot {h['slot']!r} wal_status="
+                  f"{h['wal_status']!r} (safe_wal_size="
+                  f"{h.get('safe_wal_size')}); WAL this consumer needs "
+                  "is under retention pressure — drain faster or raise "
+                  "max_slot_wal_keep_size", file=sys.stderr)
 
 
 def _run_postgres_logical(args, stop: threading.Event, runner) -> int:
-    """`--transport logical`: replication slot + test_decoding — the
-    production CDC mechanism (sources/logical_pg.py). Commit-ordered
-    and transaction-atomic by construction (no fence), ~zero write
-    amplification (no trigger, no outbox table), durable LSN offsets
-    in the slot itself. At-least-once with replay-stable seqs: a crash
-    between sink and advance re-emits the same seq-named files."""
-    from .pipeline import handle_events
-    from .session import get_spark
-    from .sources.logical_pg import (
-        DEFAULT_SLOT,
-        PgLogicalCaptureManager,
-        PgLogicalPoller,
+    """`--transport logical`: replication slot + test_decoding or
+    pgoutput — the production CDC mechanism (sources/logical_pg.py).
+    Commit-ordered and transaction-atomic by construction (no fence),
+    ~zero write amplification (no trigger, no outbox table), durable
+    LSN offsets in the slot itself. At-least-once with replay-stable
+    seqs: a crash between sink and advance re-emits the same seq-named
+    files.
+
+    `--shards N` (pgoutput): capture sharded across N
+    publications/slots, drained by N parallel executor-side pollers
+    (sources/sharded_pg.py) and merged into one stream with
+    replay-stable interleaved global seqs. Ordering contract printed at
+    startup: per-table commit order (tables hash-pin to one shard);
+    cross-shard interleaving is arbitrary."""
+    from pyspark.sql import functions as F
+
+    from .sources import logical_pg, pgoutput_pg, sharded_pg
+    from .sources.outbox_local import OUTBOX_BATCH_SCHEMA
+    from .sources.outbox_pg import (
+        pg_bootstrap_done,
+        pg_mark_bootstrap_done,
+        pg_snapshot_batch,
     )
-    from .sources.outbox_local import raw_events_from_outbox
 
-    for flag, name, why in (
-        (args.replay_from is not None, "--replay-from",
-         "a replication slot cannot rewind (confirmed_flush_lsn is "
-         "monotone); replay = new slot + --bootstrap"),
-        (args.compact, "--compact",
-         "WAL retention is released by the slot advance itself; there "
-         "is no outbox table to prune"),
-        (args.parallel_read is not None, "--parallel-read",
-         "WAL decode order is inherently serial (it IS the changelog); "
-         "parallelism applies downstream of the batch"),
-        (args.txn_consistent, "--txn-consistent",
-         "logical batches are transaction-atomic by construction "
-         "(pg_logical_slot_peek_changes only stops at commit "
-         "boundaries) — no assembler needed"),
-        (args.shards is not None and args.plugin != "pgoutput",
-         "--shards",
-         "sharding scopes decode via publications — pgoutput only "
-         "(--plugin pgoutput)"),
-        (args.shards is not None and args.shards < 1,
-         "--shards", "N must be >= 1"),
-        (args.spool_mode and args.spill_dir is None,
-         "--spool-mode",
-         "continuous spool ingest needs --spill-dir (the spool "
-         "directory is the durable copy of drained WAL)"),
-    ):
-        if flag:
-            print(f"{name} does not apply to the logical transport: {why}",
-                  file=sys.stderr)
-            return 2
-
-    slot = args.slot or DEFAULT_SLOT
-    if args.shards is not None:
-        return _run_postgres_logical_sharded(args, stop, runner)
-    if args.plugin == "pgoutput":
-        from .sources.pgoutput_pg import (
-            DEFAULT_PUBLICATION,
-            PgOutputCaptureManager,
-            PgOutputPoller,
-        )
-
-        publication = args.publication or DEFAULT_PUBLICATION
-        cap = PgOutputCaptureManager(
+    slot = args.slot or logical_pg.DEFAULT_SLOT
+    publication = args.publication or pgoutput_pg.DEFAULT_PUBLICATION
+    sharded = args.shards is not None
+    if sharded:
+        cap = sharded_pg.ShardedPgOutputCapture(
+            runner, n_shards=args.shards, slot_prefix=slot,
+            publication_prefix=publication, table_regexp=args.tables)
+    elif args.plugin == "pgoutput":
+        cap = pgoutput_pg.PgOutputCaptureManager(
             runner, slot=slot, publication=publication,
             table_regexp=args.tables)
     else:
-        cap = PgLogicalCaptureManager(runner, slot=slot,
-                                      table_regexp=args.tables)
-    # validate BEFORE any destructive step (review finding): removing
-    # the other transports' triggers and THEN failing install on
-    # wal_level=replica would leave the database with no capture at
-    # all — every write until the operator re-runs would be lost
-    if not args.remove:
-        wal_level = runner.scalar("SHOW wal_level")
-        if wal_level != "logical":
-            print(f"--transport logical needs wal_level=logical (server "
-                  f"has {wal_level!r}); existing capture left untouched",
-                  file=sys.stderr)
-            return 2
-        # ALL install preconditions run before any destructive step
-        # (ADVICE r9: wal_level alone was checked — a cluster-global
-        # slot owned by another database, or an empty table set, still
-        # failed install AFTER the other transports' triggers were
-        # removed, leaving the database with no capture at all)
-        try:
-            if not cap.discover_tables():
-                print("no tables match the table regexp; existing "
-                      "capture left untouched", file=sys.stderr)
-                return 2
-            if hasattr(cap, "_slot_exists"):
-                cap._slot_exists()  # raises on foreign-database slot
-        except Exception as exc:  # noqa: BLE001 — loud, pre-destructive
-            print(f"logical install precondition failed: {exc}; "
-                  "existing capture left untouched", file=sys.stderr)
-            return 2
+        cap = logical_pg.PgLogicalCaptureManager(runner, slot=slot,
+                                                 table_regexp=args.tables)
+    if not args.remove and not _logical_preconditions(runner, cap):
+        return 2
     # NO remove-then-install here: dropping the slot would forget the
     # resume position (triggers are stateless, slots are the offset).
     # But a daemon switched TO logical must clean the other transports'
     # triggers so they stop writing an unconsumed outbox / channel.
-    from .sources.outbox_pg import PgCaptureManager, PgNotifyCaptureManager
-
-    PgCaptureManager(runner, table_regexp=args.tables).remove()
-    PgNotifyCaptureManager(runner, table_regexp=args.tables).remove()
+    _remove_pg_triggers(runner, args.tables)
     if args.remove:
-        tables = cap.remove()
-        print(f"removed slot {slot!r}; replica identity reset on "
-              f"{len(tables)} tables", file=sys.stderr)
-        return 0
-    # Exactly-once bootstrap anchor (round 10, VERDICT r9 #2): when a
-    # snapshot is needed AND the slot does not exist yet, create the
-    # slot over the walsender with an EXPORTED snapshot at its
-    # consistent point — snapshot ∪ changelog then partition history
-    # DISJOINTLY (no overlap for downstream to absorb). Identity and
-    # publication are applied first (create_slot=False) so the first
-    # decoded UPDATE already carries the complete old tuple. If the
-    # slot already exists (including a crash between an earlier
-    # exported-snapshot session and the sentinel write — the session
-    # died, the slot persisted), the snapshot falls back to the
-    # documented at-least-once overlap stance below.
-    snap_session = None
-    boot_marker = "daemon@logical#bootstrap"
-    if args.rebootstrap:
-        # Slot-loss recovery (round 11, VERDICT r10 #6): wal_status=
-        # 'lost' means max_slot_wal_keep_size pressure discarded WAL
-        # this slot still needed — its unconsumed changes are GONE and
-        # the stream is dead (decode errors on the next peek). The
-        # recovery is the bootstrap machinery re-run: drop the dead
-        # slot, clear the bootstrap sentinel, and route through the
-        # exported-snapshot session below — the fresh snapshot shows
-        # the table state INCLUDING every change the lost WAL carried,
-        # and the fresh slot decodes exactly what commits after it
-        # (disjoint, exactly-once switchover). Seq anchors are kept:
-        # they describe rows already durably sunk, and the new slot's
-        # commit LSNs are strictly beyond the stored anchor.
-        from .sources.outbox_pg import PG_OFFSET_TABLE, _quote_lit
-
-        status = runner.scalar(
-            "SELECT wal_status FROM pg_replication_slots "
-            f"WHERE slot_name = {_quote_lit(slot)}")
-        if status == "lost":
-            print(f"slot {slot!r} is LOST (WAL retention pressure); "
-                  "rebootstrapping: drop slot -> exported-snapshot "
-                  "slot -> snapshot + changelog", file=sys.stderr)
-            runner.sql(
-                f"SELECT pg_drop_replication_slot({_quote_lit(slot)});")
-            # clear the sentinel so the snapshot re-runs (check=False:
-            # a first-ever run has no offset table yet)
-            runner.sql(
-                f"DELETE FROM {PG_OFFSET_TABLE} "
-                f"WHERE consumer = {_quote_lit(boot_marker)};",
-                check=False)
-            args.bootstrap = True
-    if args.bootstrap:
-        from .sources.logical_pg import DECODING_PLUGIN, SlotSnapshotSession
-        from .sources.outbox_pg import pg_bootstrap_done as _boot_done
-
-        if not _boot_done(runner, boot_marker) and not cap._slot_exists():
-            cap.install(create_slot=False)
-            snap_session = SlotSnapshotSession(
-                runner.conninfo, slot,
-                plugin=("pgoutput" if args.plugin == "pgoutput"
-                        else DECODING_PLUGIN),
-            ).__enter__()
-    try:
-        tables = cap.install()
-    except Exception:
-        if snap_session is not None:
-            snap_session.close()
-        raise
-    print(f"logical capture (slot {slot!r}) on {len(tables)} tables: "
-          f"{tables}", file=sys.stderr)
-
-    spark = get_spark("pqstream-daemon")
-    redactions = _load_redactions(args.redactions)
-    if args.plugin == "pgoutput":
-        poller = PgOutputPoller.open_durable(
-            runner, slot=slot, consumer=args.consumer or "daemon",
-            publication=publication, table_regexp=args.tables,
-            # giant-transaction escape hatch (round 11): the binary
-            # spool — structural reframing of pg_recvlogical's output
-            spill_dir=args.spill_dir,
-        )
-    else:
-        poller = PgLogicalPoller.open_durable(
-            runner, slot=slot, consumer=args.consumer or "daemon",
-            table_regexp=args.tables, spill_dir=args.spill_dir,
-        )
-    # slot retention health at startup (round 10): an 'unreserved'/
-    # 'lost' slot means max_slot_wal_keep_size pressure already
-    # discarded (or is about to discard) WAL this consumer needs —
-    # surfaced loudly instead of failing later with a decode error
-    health = poller.lag()
-    if health.get("wal_status") not in (None, "reserved", "extended"):
-        print(f"WARNING: slot {slot!r} wal_status="
-              f"{health['wal_status']!r} (safe_wal_size="
-              f"{health.get('safe_wal_size')}); WAL this consumer needs "
-              "is under retention pressure — drain faster or raise "
-              "max_slot_wal_keep_size", file=sys.stderr)
-    if args.out == "-":
-        emit = lambda df, ep: _emit(df, "-", ep)  # noqa: E731
-    else:
-        from .streaming.sinks import jsonl_seq_writer
-
-        emit = jsonl_seq_writer(args.out)
-    if args.bootstrap:
-        from .sources.outbox_pg import (
-            pg_bootstrap_done,
-            pg_mark_bootstrap_done,
-            pg_snapshot_batch,
-        )
-
-        # transport-scoped sentinel (ends with #bootstrap so both
-        # compact() exclusions still match): an outbox-transport
-        # bootstrap must NOT satisfy the logical one — the slot only
-        # sees WAL after its creation, so the logical path needs its
-        # OWN snapshot regardless of earlier outbox history
-        marker = boot_marker
-        if not pg_bootstrap_done(runner, marker):
-            # switchover stance: with an exported-snapshot session
-            # (snap_session) the snapshot is anchored at the slot's
-            # consistent point — snapshot and changelog are DISJOINT,
-            # exactly-once across the boundary. Without one (slot
-            # predates this bootstrap, or a crash killed the exporting
-            # session), the snapshot runs read-committed AFTER slot
-            # creation: at-least-once overlap, absorbed by the
-            # seq-keyed idempotent downstream (documented DEPLOY §4a)
-            try:
-                snap_batch = pg_snapshot_batch(
-                    runner, spark, args.tables,
-                    snapshot_name=(snap_session.snapshot_name
-                                   if snap_session is not None else None),
-                )
-                snap = handle_events(
-                    raw_events_from_outbox(snap_batch),
-                    redactions=redactions, typed_wire=True,
-                )
-                if args.out != "-":
-                    for f in os.listdir(args.out):
-                        if f.startswith("batch--"):
-                            os.remove(os.path.join(args.out, f))
-                emit(snap, -1)
-            finally:
-                if snap_session is not None:
-                    snap_session.close()
-                    snap_session = None
-            pg_mark_bootstrap_done(runner, marker)
-    if snap_session is not None:  # bootstrap sentinel already set
-        snap_session.close()
-    from .sources.outbox_local import OUTBOX_BATCH_SCHEMA
-
-    epoch = 0
-    while not stop.is_set():
-        if args.spool_mode:
-            # continuous executor-side spool ingest (round 11): the
-            # drain writes segments database->disk and an executor
-            # parses them into Arrow batches; the persisted frame is
-            # counted once here and reused by the sink
-            batch, n = poller.read_batch_spool_distributed(spark)
+        if sharded:
+            cap.remove()
+            print(f"removed sharded capture ({args.shards} shards, slot "
+                  f"prefix {slot!r})", file=sys.stderr)
         else:
-            # read_rows gives the row count driver-side for free — a
-            # count() here would burn one Spark job per poll (review
-            # finding; the outbox loop avoids the same trap via
-            # _pending_hi)
-            data_rows, _ = poller.read_rows()
-            n = len(data_rows)
-            batch = spark.createDataFrame(data_rows, OUTBOX_BATCH_SCHEMA)
-        events = handle_events(
-            raw_events_from_outbox(batch), redactions=redactions,
-            typed_wire=True,
-        )
-        emit(events, epoch)
-        poller.advance()
-        epoch += 1
-        if args.once:
-            if n == 0:
-                break
-        else:
-            stop.wait(args.poll_interval)
-    return 0
-
-
-def _run_postgres_logical_sharded(args, stop: threading.Event,
-                                  runner) -> int:
-    """`--shards N` (round 11, VERDICT r10 #1): capture sharded across
-    N pgoutput publications/slots, drained by N parallel executor-side
-    pollers (sources/sharded_pg.py) and merged into one stream with
-    replay-stable interleaved global seqs. Ordering contract printed at
-    startup: per-table commit order (tables hash-pin to one shard);
-    cross-shard interleaving is arbitrary."""
-    from .pipeline import handle_events
-    from .session import get_spark
-    from .sources.logical_pg import DEFAULT_SLOT
-    from .sources.outbox_local import raw_events_from_outbox
-    from .sources.outbox_pg import PgCaptureManager, PgNotifyCaptureManager
-    from .sources.pgoutput_pg import DEFAULT_PUBLICATION
-    from .sources.sharded_pg import (
-        ShardedPgOutputCapture,
-        ShardedPgOutputPoller,
-    )
-
-    slot = args.slot or DEFAULT_SLOT
-    publication = args.publication or DEFAULT_PUBLICATION
-    cap = ShardedPgOutputCapture(
-        runner, n_shards=args.shards, slot_prefix=slot,
-        publication_prefix=publication, table_regexp=args.tables)
-    if not args.remove:
-        wal_level = runner.scalar("SHOW wal_level")
-        if wal_level != "logical":
-            print(f"--transport logical needs wal_level=logical (server "
-                  f"has {wal_level!r}); existing capture left untouched",
-                  file=sys.stderr)
-            return 2
-        if not cap.discover_tables():
-            print("no tables match the table regexp; existing capture "
-                  "left untouched", file=sys.stderr)
-            return 2
-    PgCaptureManager(runner, table_regexp=args.tables).remove()
-    PgNotifyCaptureManager(runner, table_regexp=args.tables).remove()
-    if args.remove:
-        cap.remove()
-        print(f"removed sharded capture ({args.shards} shards, slot "
-              f"prefix {slot!r})", file=sys.stderr)
+            tables = cap.remove()
+            print(f"removed slot {slot!r}; replica identity reset on "
+                  f"{len(tables)} tables", file=sys.stderr)
         return 0
-    # Per-shard exactly-once bootstrap (round 11 composition: the
-    # sharded analog of the single-slot exported-snapshot anchor).
-    # Shards are TABLE-DISJOINT, so "snapshot ∪ changelog partitions
-    # history disjointly" holds independently per shard and the union
-    # of N per-shard exactly-once streams is globally exactly-once.
-    # Each shard gets its own sentinel (a crash between shard k's
-    # snapshot and shard k+1's resumes at k+1, never re-snapshots k).
-    from .sources.outbox_pg import PG_OFFSET_TABLE, _quote_lit
-    from .sources.sharded_pg import (
-        _anchored_regexp,
-        migrate_legacy_shard_markers,
-        shard_bootstrap_marker as _shard_marker,
-    )
-
-    def _shard_slot(i: int) -> str:
-        return f"{slot}_s{i}"
-
-    # rename any round-11 sentinel rows to the compact()-excluded form
-    migrate_legacy_shard_markers(runner)
-
-    pre_assignment = cap.shards()
-    rebooted: set[int] = set()
-    if args.rebootstrap:
-        # per-shard slot-loss recovery: only LOST shards re-bootstrap;
-        # healthy shards keep their slots and stream on undisturbed
-        for i in pre_assignment:
-            status = runner.scalar(
-                "SELECT wal_status FROM pg_replication_slots "
-                f"WHERE slot_name = {_quote_lit(_shard_slot(i))}")
-            if status == "lost":
-                print(f"shard slot {_shard_slot(i)!r} is LOST (WAL "
-                      "retention pressure); rebootstrapping shard "
-                      f"{i}: drop slot -> exported-snapshot slot -> "
-                      "snapshot + changelog", file=sys.stderr)
-                runner.sql("SELECT pg_drop_replication_slot("
-                           f"{_quote_lit(_shard_slot(i))});")
-                runner.sql(
-                    f"DELETE FROM {PG_OFFSET_TABLE} "
-                    f"WHERE consumer = {_quote_lit(_shard_marker(i))};",
-                    check=False)
-                rebooted.add(i)
+    # Bootstrap units, each with its own sentinel: the slot, or every
+    # shard. Shards are TABLE-DISJOINT, so "snapshot ∪ changelog
+    # partitions history disjointly" holds independently per shard and
+    # the union of N per-shard exactly-once streams is globally
+    # exactly-once; a crash between shard k's snapshot and shard k+1's
+    # resumes at k+1, never re-snapshots k. unit id -> (sentinel, slot,
+    # capture manager, table regexp).
+    if sharded:
+        # rename any legacy sentinel rows to the compaction-excluded form
+        sharded_pg.migrate_legacy_shard_markers(runner)
+        units = {
+            i: (sharded_pg.shard_bootstrap_marker(i),
+                sharded_pg.shard_slot(slot, i), cap._manager(i, tables),
+                sharded_pg._anchored_regexp(tables))
+            for i, tables in cap.shards().items()
+        }
+    else:
+        # transport-scoped sentinel (ends with #bootstrap so compaction
+        # skips it): an outbox-transport bootstrap must NOT satisfy the
+        # logical one — the slot only sees WAL after its creation, so
+        # the logical path needs its OWN snapshot regardless of earlier
+        # outbox history
+        units = {0: ("daemon@logical#bootstrap", slot, cap, args.tables)}
+    # slot-loss recovery: only LOST slots re-bootstrap; healthy shards
+    # keep their slots and stream on undisturbed
+    rebooted = {i for i, (marker, unit_slot, _, _) in units.items()
+                if args.rebootstrap
+                and _drop_lost_slot(runner, unit_slot, marker)}
+    owed = [i for i in sorted(units) if args.bootstrap or i in rebooted]
+    plugin = ("pgoutput" if args.plugin == "pgoutput"
+              else logical_pg.DECODING_PLUGIN)
     snap_sessions: dict[int, object] = {}
-    if args.bootstrap or rebooted:
-        from .sources.logical_pg import SlotSnapshotSession
-        from .sources.outbox_pg import pg_bootstrap_done as _boot_done
-
-        for i, tables in pre_assignment.items():
-            if not (args.bootstrap or i in rebooted):
-                continue
-            mgr = cap._manager(i, tables)
-            if not _boot_done(runner, _shard_marker(i)) \
-                    and not mgr._slot_exists():
-                # identity + publication BEFORE the slot so the first
-                # decoded UPDATE already carries the full old tuple
-                mgr.install(create_slot=False)
-                try:
-                    snap_sessions[i] = SlotSnapshotSession(
-                        runner.conninfo, _shard_slot(i),
-                        plugin="pgoutput").__enter__()
-                except Exception:
-                    for s in snap_sessions.values():
-                        s.close()
-                    raise
     try:
-        assignment = cap.install()
+        for i in owed:
+            marker, unit_slot, mgr, _ = units[i]
+            sess = _snapshot_session(runner, mgr, unit_slot, marker, plugin)
+            if sess is not None:
+                snap_sessions[i] = sess
+        installed = cap.install()
     except Exception:
         for s in snap_sessions.values():
             s.close()
         raise
-    print(f"sharded logical capture: {len(assignment)} live shards over "
-          f"{sum(len(t) for t in assignment.values())} tables "
-          f"{dict(assignment)}; ordering domain = per table (same-table "
-          "events ride one shard; cross-shard order arbitrary)",
-          file=sys.stderr)
-
-    spark = get_spark("pqstream-daemon")
-    redactions = _load_redactions(args.redactions)
-    poller = ShardedPgOutputPoller.open_durable(
-        runner.conninfo, n_shards=args.shards, slot_prefix=slot,
-        publication_prefix=publication,
-        consumer=args.consumer or "daemon",
-        spill_dir=args.spill_dir)
-    for h in poller.lag():
-        if h.get("wal_status") not in (None, "reserved", "extended"):
-            print(f"WARNING: shard slot {h['slot']!r} wal_status="
-                  f"{h['wal_status']!r} — WAL under retention pressure",
-                  file=sys.stderr)
-    if args.out == "-":
-        emit = lambda df, ep: _emit(df, "-", ep)  # noqa: E731
+    if sharded:
+        print(f"sharded logical capture: {len(installed)} live shards "
+              f"over {sum(len(t) for t in installed.values())} tables "
+              f"{dict(installed)}; ordering domain = per table "
+              "(same-table events ride one shard; cross-shard order "
+              "arbitrary)", file=sys.stderr)
     else:
-        from .streaming.sinks import jsonl_seq_writer
+        print(f"logical capture (slot {slot!r}) on {len(installed)} "
+              f"tables: {installed}", file=sys.stderr)
 
-        emit = jsonl_seq_writer(args.out)
-    if args.bootstrap or rebooted:
-        import re as _re
-
-        from pyspark.sql import functions as F
-
-        from .sources.outbox_pg import (
-            pg_bootstrap_done,
-            pg_mark_bootstrap_done,
-            pg_snapshot_batch,
-        )
-
-        n_sh = args.shards
-        if (args.bootstrap and args.out != "-"
-                and not any(pg_bootstrap_done(runner, _shard_marker(i))
-                            for i in pre_assignment)):
-            # a FRESH full bootstrap re-snapshots every shard: drop all
-            # stale snapshot files up front. The per-shard modulo decode
-            # below recovers shard ownership with the CURRENT --shards
-            # value, so files written under a DIFFERENT shard count
-            # decode to the wrong shard and would survive, leaving stale
-            # snapshot rows beside fresh ones (ADVICE r11 #3). Guarded
-            # on no shard marker being set: a crash-resume must NOT
-            # delete an already-snapshotted shard's files (its marker
-            # makes the loop skip re-emitting them).
-            for f in os.listdir(args.out):
-                if _re.fullmatch(r"batch-(-\d+)-(-\d+)\.jsonl", f):
-                    os.remove(os.path.join(args.out, f))
-        for i, tables in sorted(pre_assignment.items()):
-            if not (args.bootstrap or i in rebooted):
-                continue
-            if pg_bootstrap_done(runner, _shard_marker(i)):
-                continue
-            sess = snap_sessions.get(i)
-            try:
-                snap_batch = pg_snapshot_batch(
-                    runner, spark, _anchored_regexp(tables),
-                    snapshot_name=(sess.snapshot_name
-                                   if sess is not None else None),
-                )
+    spark = _spark(stop)
+    redactions = _load_redactions(args.redactions)
+    if sharded:
+        poller = sharded_pg.ShardedPgOutputPoller.open_durable(
+            runner.conninfo, n_shards=args.shards, slot_prefix=slot,
+            publication_prefix=publication,
+            consumer=args.consumer or "daemon",
+            spill_dir=args.spill_dir)
+        _warn_retention(poller.lag())
+    else:
+        poller_cls, extra = logical_pg.PgLogicalPoller, {}
+        if args.plugin == "pgoutput":
+            poller_cls = pgoutput_pg.PgOutputPoller
+            extra = {"publication": publication}
+        poller = poller_cls.open_durable(
+            runner, slot=slot, consumer=args.consumer or "daemon",
+            table_regexp=args.tables,
+            # giant-transaction escape hatch (pgoutput: the binary
+            # spool, a structural reframing of pg_recvlogical's output)
+            spill_dir=args.spill_dir, **extra)
+        _warn_retention([poller.lag()])
+    emit = _sink(args.out)
+    snap_file = re.compile(r"batch-(-\d+)-(-\d+)\.jsonl")
+    if (sharded and args.bootstrap and args.out != "-"
+            and not any(pg_bootstrap_done(runner, marker)
+                        for marker, _, _, _ in units.values())):
+        # a FRESH full bootstrap re-snapshots every shard: drop all
+        # stale snapshot files up front. The per-shard modulo decode
+        # below recovers shard ownership with the CURRENT --shards
+        # value, so files written under a DIFFERENT shard count
+        # decode to the wrong shard and would survive, leaving stale
+        # snapshot rows beside fresh ones. Guarded on no shard marker
+        # being set: a crash-resume must NOT delete an
+        # already-snapshotted shard's files (its marker makes the loop
+        # skip re-emitting them).
+        for f in os.listdir(args.out):
+            if snap_file.fullmatch(f):
+                os.remove(os.path.join(args.out, f))
+    for i in owed:
+        marker, _, _, table_regexp = units[i]
+        if pg_bootstrap_done(runner, marker):
+            continue
+        # switchover stance: with an exported-snapshot session the
+        # snapshot is anchored at the slot's consistent point —
+        # snapshot and changelog are DISJOINT, exactly-once across the
+        # boundary. Without one (slot predates this bootstrap, or a
+        # crash killed the exporting session), the snapshot runs
+        # read-committed AFTER slot creation: at-least-once overlap,
+        # absorbed by the seq-keyed idempotent downstream (documented
+        # DEPLOY §4a)
+        sess = snap_sessions.pop(i, None)
+        try:
+            snap_batch = pg_snapshot_batch(
+                runner, spark, table_regexp,
+                snapshot_name=(sess.snapshot_name
+                               if sess is not None else None),
+            )
+            if not sharded:
+                _emit_snapshot(args, emit, redactions, snap_batch)
+            else:
                 # snapshot seqs are -n..-1 PER SHARD; re-encode them
                 # uniquely (local*N - shard: still negative, distinct
                 # across shards, and (-seq) % N recovers the shard —
-                # which is how the stale-file cleanup below scopes
-                # itself to THIS shard on a partial re-bootstrap)
+                # which is how the stale-file cleanup scopes itself to
+                # THIS shard on a partial re-bootstrap)
                 snap_batch = snap_batch.withColumn(
-                    "seq", (F.col("seq") * n_sh - i).cast("long"))
-                snap = handle_events(
-                    raw_events_from_outbox(snap_batch),
-                    redactions=redactions, typed_wire=True,
-                )
-                if args.out != "-":
-                    for f in os.listdir(args.out):
-                        m = _re.fullmatch(
-                            r"batch-(-\d+)-(-\d+)\.jsonl", f)
-                        if m and (-int(m.group(2))) % n_sh == i:
-                            os.remove(os.path.join(args.out, f))
-                emit(snap, -(i + 1))
-            finally:
-                if sess is not None:
-                    sess.close()
-                    snap_sessions.pop(i, None)
-            pg_mark_bootstrap_done(runner, _shard_marker(i))
+                    "seq", (F.col("seq") * args.shards - i).cast("long"))
+
+                def stale(f, i=i):
+                    m = snap_file.fullmatch(f)
+                    return (m is not None
+                            and (-int(m.group(2))) % args.shards == i)
+
+                _emit_snapshot(args, emit, redactions, snap_batch,
+                               epoch=-(i + 1), stale=stale)
+        finally:
+            if sess is not None:
+                sess.close()
+        pg_mark_bootstrap_done(runner, marker)
     for s in snap_sessions.values():  # sentinels already set
         s.close()
-    epoch = 0
-    while not stop.is_set():
+
+    def poll():
         if args.spool_mode:
-            # sharded continuous spool ingest: N parallel
-            # pg_recvlogical drains, one executor-side parse job
+            # continuous executor-side spool ingest: the drain writes
+            # segments database->disk and an executor parses them into
+            # Arrow batches (sharded: N parallel pg_recvlogical drains,
+            # one parse job); the persisted frame is counted once here
+            # and reused by the sink
             batch, n = poller.read_batch_spool_distributed(spark)
-        else:
+        elif sharded:
             batch, n = poller.read_batch_distributed(spark)
-        events = handle_events(
-            raw_events_from_outbox(batch), redactions=redactions,
-            typed_wire=True,
-        )
-        emit(events, epoch)
-        poller.advance()
-        epoch += 1
-        if args.once:
-            if n == 0:
-                break
         else:
-            stop.wait(args.poll_interval)
-    return 0
+            # read_rows gives the row count driver-side for free — a
+            # count() here would burn one Spark job per poll
+            data_rows, _ = poller.read_rows()
+            n = len(data_rows)
+            batch = spark.createDataFrame(data_rows, OUTBOX_BATCH_SCHEMA)
+        return batch, n == 0
+
+    return _serve(args, stop, emit, redactions, poll, poller.advance)
 
 
 _ACTIVE_WIRE = None  # set while the --listen-http wire server is up
 
 
 def _run_changelog_dir(args, stop: threading.Event) -> int:
-    from .session import get_spark
+    from .streaming import sinks
     from .streaming.subscribe import SubscriptionManager
     from .streaming.source import stream_changelog
 
-    spark = get_spark("pqstream-daemon")
+    spark = _spark(stop)
     mgr = SubscriptionManager(
         lambda: stream_changelog(spark, args.connect),
         redactions=_load_redactions(args.redactions),
@@ -1117,11 +1047,11 @@ def _run_changelog_dir(args, stop: threading.Event) -> int:
         global _ACTIVE_WIRE  # observable handle for tests/tooling
         _ACTIVE_WIRE = wire
         print(f"Listen wire serving on {wire.url}/listen", file=sys.stderr)
-    out = args.out
     q = mgr.listen(
         "daemon",
         table_regexp=args.tables or ".*",
-        foreach_batch=lambda df, epoch: _emit(df, out, epoch),
+        foreach_batch=(_print_batch if args.out == "-"
+                       else sinks.jsonl_dir_writer(args.out)),
         checkpoint_dir=args.checkpoint,
         typed_wire=True,
     )
@@ -1154,6 +1084,8 @@ def _print_lag(connect: str, out) -> int:
     backlog of an outbox without attaching a consumer. Read-only —
     missing tables report an empty outbox instead of creating anything
     (an operator probing a prospective database must not mutate it)."""
+    from .sources.outbox import offset_row_kind
+
     rows: list[tuple[str, int]] = []
     max_seq = 0
     if connect.startswith("sqlite:"):
@@ -1199,11 +1131,7 @@ def _print_lag(connect: str, out) -> int:
                 )
             ]
     for consumer, last_seq in rows:
-        kind = ("bootstrap" if consumer.endswith("#bootstrap")
-                else "reportfloor" if consumer.endswith("#reportfloor")
-                else "lease" if consumer.endswith("#lease")
-                else "logical" if "#logical" in consumer
-                else "consumer")
+        kind = offset_row_kind(consumer)
         rec = {"consumer": consumer, "kind": kind, "last_seq": last_seq}
         if kind in ("consumer", "reportfloor"):
             # only outbox-domain offsets compare against the outbox
@@ -1214,70 +1142,39 @@ def _print_lag(connect: str, out) -> int:
         print(json.dumps(rec), file=out)
     print(json.dumps({
         "summary": True, "max_seq": max_seq,
-        "consumers": sum(
-            1 for c, _ in rows
-            if not (c.endswith(("#bootstrap", "#reportfloor", "#lease"))
-                    or "#logical" in c)
-        ),
+        "consumers": sum(1 for c, _ in rows
+                         if offset_row_kind(c) == "consumer"),
     }), file=out)
     return 0
 
 
 def _print_lag_sharded(connect: str, slot: str | None, n_shards: int,
                        out) -> int:
-    """`--lag --transport logical --shards N` (round 12, VERDICT r11
-    #6): ONE JSON report for the whole sharded capture — per-shard
-    backlog/health rows plus an unhealthy count — instead of N
-    invocations with hand-assembled output. A shard whose slot is
-    MISSING entirely (dropped under retention pressure, partial
-    remove) is surfaced as unhealthy too: it is the worst lag state,
-    not an absence of data."""
+    """`--lag --transport logical --plugin pgoutput --shards N`: ONE
+    JSON report for the whole sharded capture — per-shard backlog/
+    health rows plus an unhealthy count — instead of N invocations
+    with hand-assembled output. A shard whose slot is MISSING entirely
+    (dropped under retention pressure, partial remove) is surfaced as
+    unhealthy too: it is the worst lag state, not an absence of
+    data."""
     from .sources.outbox_pg import PsqlRunner, _quote_lit
     from .sources.sharded_pg import DEFAULT_SHARD_SLOT
 
     prefix = slot or DEFAULT_SHARD_SLOT
     runner = PsqlRunner(connect[len("postgres:"):])
-    rows = runner.query_csv(
-        "SELECT slot_name, active::text AS active, "
-        "(pg_current_wal_insert_lsn() - confirmed_flush_lsn)::bigint "
-        "AS wal_bytes_pending, "
-        "(pg_current_wal_insert_lsn() - restart_lsn)::bigint "
-        "AS wal_bytes_retained, "
-        "wal_status, safe_wal_size "
-        "FROM pg_replication_slots WHERE slot_type = 'logical' "
-        f"AND slot_name LIKE {_quote_lit(prefix + '_s%')} "
-        "ORDER BY slot_name"
-    )
     by_shard: dict[int, dict] = {}
-    for r in rows:
+    for r in _slot_rows(runner,
+                        f"slot_name LIKE {_quote_lit(prefix + '_s%')}"):
         suffix = r["slot_name"][len(prefix) + 2:]
-        if not suffix.isdigit():
-            continue
-        by_shard[int(suffix)] = r
-    shards = []
-    unhealthy = 0
-    for i in range(n_shards):
-        r = by_shard.get(i)
-        if r is None:
-            shards.append({"shard": i, "slot": f"{prefix}_s{i}",
-                           "missing": True})
-            unhealthy += 1
-            continue
-        status = r["wal_status"]
-        if status not in (None, "reserved", "extended"):
-            unhealthy += 1
-        shards.append({
-            "shard": i,
-            "slot": r["slot_name"],
-            "active": r["active"] in ("t", "true"),
-            "wal_bytes_pending": int(r["wal_bytes_pending"] or 0),
-            "wal_bytes_retained": int(r["wal_bytes_retained"] or 0),
-            "wal_status": status,
-            "safe_wal_size": (
-                int(r["safe_wal_size"]) if r["safe_wal_size"] is not None
-                else None
-            ),
-        })
+        if suffix.isdigit():
+            by_shard[int(suffix)] = r
+    shards = [
+        {"shard": i, **_slot_record(by_shard[i])} if i in by_shard
+        else {"shard": i, "slot": f"{prefix}_s{i}", "missing": True}
+        for i in range(n_shards)
+    ]
+    unhealthy = sum(1 for s in shards
+                    if s.get("missing") or s["wal_status"] not in _HEALTHY)
     print(json.dumps({
         "shards": shards, "n_shards": n_shards, "unhealthy": unhealthy,
     }), file=out)
@@ -1297,42 +1194,14 @@ def _print_lag_logical(connect: str, slot: str | None, out) -> int:
     from .sources.outbox_pg import PsqlRunner, _quote_lit
 
     runner = PsqlRunner(connect[len("postgres:"):])
-    where = "WHERE slot_type = 'logical'"
-    if slot:
-        where += f" AND slot_name = {_quote_lit(slot)}"
-    rows = runner.query_csv(
-        # insert_lsn, not wal_lsn: async-committed WAL sitting in
-        # wal_buffers has not moved the WRITE position yet, and lag
-        # must count it. wal_status/safe_wal_size (round-10, VERDICT r9
-        # #3): the abandoned-slot footgun — a slot whose consumer
-        # stopped polling retains WAL forever and fills the source
-        # disk; 'unreserved'/'lost' means max_slot_wal_keep_size
-        # pressure is already discarding (or about to discard) the
-        # slot's WAL, and the operator must drain or remove() it.
-        "SELECT slot_name, active::text AS active, "
-        "(pg_current_wal_insert_lsn() - confirmed_flush_lsn)::bigint "
-        "AS wal_bytes_pending, "
-        "(pg_current_wal_insert_lsn() - restart_lsn)::bigint "
-        "AS wal_bytes_retained, "
-        "wal_status, safe_wal_size "
-        f"FROM pg_replication_slots {where} ORDER BY slot_name"
-    )
+    rows = _slot_rows(runner,
+                      f"slot_name = {_quote_lit(slot)}" if slot else "TRUE")
     unhealthy = 0
     for r in rows:
-        status = r["wal_status"]
-        if status not in (None, "reserved", "extended"):
+        rec = _slot_record(r)
+        if rec["wal_status"] not in _HEALTHY:
             unhealthy += 1
-        print(json.dumps({
-            "slot": r["slot_name"],
-            "active": r["active"] in ("t", "true"),
-            "wal_bytes_pending": int(r["wal_bytes_pending"] or 0),
-            "wal_bytes_retained": int(r["wal_bytes_retained"] or 0),
-            "wal_status": status,
-            "safe_wal_size": (
-                int(r["safe_wal_size"]) if r["safe_wal_size"] is not None
-                else None
-            ),
-        }), file=out)
+        print(json.dumps(rec), file=out)
     print(json.dumps({
         "summary": True, "slots": len(rows), "unhealthy": unhealthy,
     }), file=out)
@@ -1346,7 +1215,7 @@ def _print_lag_logical(connect: str, slot: str | None, out) -> int:
 
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
-    stop = threading.Event()
+    stop = _Stop()
 
     # SIGINT → graceful stop (ctxutil/background_signals.go:12-22
     # parity); the previous handlers come back before main() returns,
@@ -1354,7 +1223,7 @@ def main(argv: list[str] | None = None) -> int:
     prev = {}
     if threading.current_thread() is threading.main_thread():
         for sig in (signal.SIGINT, signal.SIGTERM):
-            prev[sig] = signal.signal(sig, lambda *_: stop.set())
+            prev[sig] = signal.signal(sig, stop)
     try:
         return _dispatch(args, stop)
     finally:
@@ -1365,62 +1234,30 @@ def main(argv: list[str] | None = None) -> int:
 
 
 def _dispatch(args: argparse.Namespace, stop: threading.Event) -> int:
-    if args.parallel_read is not None and (
-        not args.connect.startswith("postgres:")
-        or args.transport != "outbox"
-    ):
-        print("--parallel-read requires the postgres outbox backend "
-              "(--connect postgres:... --transport outbox): the other "
-              "backends have no seq-partitionable server-side table",
-              file=sys.stderr)
+    """Validate the whole flag set, then run the selected backend. Every
+    rejection happens here, before any trigger, slot or file is
+    touched."""
+    backend = _backend(args)
+    if backend == "dir" and not os.path.isdir(args.connect):
+        print(f"--connect: not a sqlite:/postgres: URL or directory: "
+              f"{args.connect}", file=sys.stderr)
         return 2
-    if args.parallel_read is not None and args.parallel_read < 1:
-        # 0 would be falsy at the dispatch check and silently fall
-        # back to the serial read — the operator must not believe the
-        # scale path is active when it is not
-        print(f"--parallel-read: N must be >= 1 (got {args.parallel_read})",
-              file=sys.stderr)
-        return 2
-    if args.fence_wait < 0:
-        print(f"--fence-wait: must be >= 0 (got {args.fence_wait})",
-              file=sys.stderr)
+    error = _flag_error(args, backend)
+    if error is not None:
+        print(error, file=sys.stderr)
         return 2
     if args.lag:
-        if (args.connect.startswith("postgres:")
-                and args.transport == "logical"):
-            if args.shards is not None:
-                return _print_lag_sharded(
-                    args.connect, args.slot, args.shards, sys.stdout)
+        if backend == "sharded":
+            return _print_lag_sharded(
+                args.connect, args.slot, args.shards, sys.stdout)
+        if backend in _SLOT:
             return _print_lag_logical(args.connect, args.slot, sys.stdout)
-        if not args.connect.startswith(("sqlite:", "postgres:")) or (
-            args.connect.startswith("postgres:")
-            and args.transport != "outbox"
-        ):
-            print("--lag requires an offset-keeping backend (--connect "
-                  "sqlite:PATH or postgres:CONNINFO with --transport "
-                  "outbox or logical): the NOTIFY wire and the directory "
-                  "backend keep no server-side consumer offsets to measure",
-                  file=sys.stderr)
-            return 2
         return _print_lag(args.connect, sys.stdout)
-    if args.connect.startswith("sqlite:"):
+    if backend == "sqlite":
         return _run_sqlite(args, stop)
-    if args.connect.startswith("postgres:"):
-        return _run_postgres(args, stop)
-    if not os.path.isdir(args.connect):
-        print(f"--connect: not a sqlite: URL or directory: {args.connect}",
-              file=sys.stderr)
-        return 2
-    if args.remove:
-        print("--remove only applies to the sqlite capture backend",
-              file=sys.stderr)
-        return 2
-    if args.replay_from is not None:
-        print("--replay-from only applies to the sqlite backend "
-              "(directory backend: remove the --checkpoint dir to replay)",
-              file=sys.stderr)
-        return 2
-    return _run_changelog_dir(args, stop)
+    if backend == "dir":
+        return _run_changelog_dir(args, stop)
+    return _run_postgres(args, stop)
 
 
 if __name__ == "__main__":

@@ -11,19 +11,19 @@ reference's at-most-once (documented divergence, SURVEY.md §7).
 
 Design split:
 - SQL text generation: pure functions, unit-tested without a database.
-- Execution: any DB-API connection (psycopg2 etc.) injected by the
-  caller; no import of a driver here. No Spark involvement — DDL setup
-  is a utility, exactly as in the reference (daemon startup,
+- Execution: `outbox_pg.PgCaptureManager` runs this DDL on a live
+  server and `outbox_pg.PgOutboxPoller` reads fenced, bounded batches
+  (`--parallel-read N` is the executor-side scale path);
+  `outbox_local` is the sqlite twin of both. DDL setup is a utility,
+  exactly as in the reference (daemon startup,
   cmd/pqsd/main.go:95-102).
-- Incremental read: `OutboxPoller.read_batch(spark)` issues a bounded
-  JDBC read per micro-batch, for use inside foreachBatch or a custom
-  DataSourceStreamReader.
+- Offset rows: `offset_row_kind` / `CONSUMER_ROWS_SQL` are the one rule
+  for which rows of an offset table are real delivery consumers.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
 
 OUTBOX_TABLE = "pqstream_outbox"
 
@@ -225,100 +225,30 @@ def filter_tables(names: list[str], table_regexp: str | None) -> list[str]:
     return [n for n in names if pat.search(n)]
 
 
-class CaptureManager:
-    """Trigger lifecycle over an injected DB-API connection.
+# Offset-table rows that are not delivery consumers, as (kind, LIKE
+# pattern on the consumer name): bootstrap sentinels, stream-reader
+# report floors (a reporting watermark that runs ahead of the reader's
+# checkpoint, never a delivery guarantee), leases, and the logical
+# transport's seq/LSN anchors (a different number space). Outbox
+# retention keys on the remaining rows only.
+_NOT_CONSUMER = (
+    ("bootstrap", "%#bootstrap"),
+    ("reportfloor", "%#reportfloor"),
+    ("lease", "%#lease"),
+    ("logical", "%#logical%"),
+)
 
-    Mirrors pqsd startup: RemoveTriggers() then InstallTriggers()
-    (cmd/pqsd/main.go:95-102); install with zero matching tables is an
-    error (server.go:136-139)."""
-
-    def __init__(self, conn, table_regexp: str | None = None) -> None:
-        self.conn = conn
-        self.table_regexp = table_regexp
-
-    def discover_tables(self) -> list[str]:
-        cur = self.conn.cursor()
-        cur.execute(DISCOVER_TABLES_SQL)
-        names = [r[0] for r in cur.fetchall()]
-        return filter_tables(names, self.table_regexp)
-
-    def _verify_outbox_json_type(self) -> None:
-        """Same loud-failure contract as PgCaptureManager (ADVICE r7):
-        a legacy jsonb outbox must not get live triggers attached."""
-        cur = self.conn.cursor()
-        cur.execute(VERIFY_OUTBOX_JSON_TYPE_SQL)
-        bad = [r[0] for r in cur.fetchall() if r[1] != "json"]
-        if bad:
-            raise outbox_jsonb_error(bad)
-
-    def install(self) -> list[str]:
-        tables = self.discover_tables()
-        if not tables:
-            raise RuntimeError("no tables match the table regexp")
-        self._verify_outbox_json_type()
-        cur = self.conn.cursor()
-        cur.execute(CREATE_OUTBOX_SQL)
-        for stmt in MIGRATE_OUTBOX_OP_CHECK_SQL:
-            cur.execute(stmt)
-        # ADVICE r8 (medium): this path previously skipped the claim-seq
-        # migration, leaving the xid-less direct-INSERT window open on
-        # outboxes it installed — PgSeqFence's soundness argument (every
-        # claimer has an assigned xid < bound) requires the seq DEFAULT
-        # on EVERY install path, not just PgCaptureManager's.
-        cur.execute(CLAIM_SEQ_FUNCTION_SQL)
-        cur.execute(MIGRATE_OUTBOX_SEQ_DEFAULT_SQL)
-        cur.execute(MIGRATE_OUTBOX_XID_SQL)
-        cur.execute(TRIGGER_FUNCTION_SQL)
-        cur.execute(TRUNCATE_TRIGGER_FUNCTION_SQL)
-        for t in tables:
-            cur.execute(install_trigger_sql(t))
-        self.conn.commit()
-        return tables
-
-    def remove(self) -> list[str]:
-        tables = self.discover_tables()
-        cur = self.conn.cursor()
-        for t in tables:
-            cur.execute(remove_trigger_sql(t))
-        self.conn.commit()
-        return tables
+# SQL predicate over an offset table's `consumer` column: true exactly
+# for the rows offset_row_kind calls 'consumer'
+CONSUMER_ROWS_SQL = " AND ".join(
+    f"consumer NOT LIKE '{pattern}'" for _, pattern in _NOT_CONSUMER
+)
 
 
-@dataclass
-class OutboxPoller:
-    """Bounded incremental JDBC reads of the outbox.
-
-    Each call reads (last_seq, last_seq + max_rows] — rate limiting by
-    construction (the micro-batch analog of maxOffsetsPerTrigger),
-    which replaces the reference's unbuffered-channel backpressure
-    (server.go:291) with bounded batches. The caller persists
-    `last_seq` in its checkpoint (foreachBatch epoch store)."""
-
-    url: str
-    max_rows: int = 100_000
-    last_seq: int = 0
-    properties: dict | None = None
-
-    def read_batch(self, spark):
-        lo, hi = self.last_seq, self.last_seq + self.max_rows
-        query = (
-            f"SELECT seq, ts, schema_name, table_name, op, id, "
-            f"payload::text AS payload_json, previous::text AS previous_json "
-            f"FROM {OUTBOX_TABLE} WHERE seq > {lo} AND seq <= {hi}"
-        )
-        reader = (
-            spark.read.format("jdbc")
-            .option("url", self.url)
-            .option("query", query)
-        )
-        for k, v in (self.properties or {}).items():
-            reader = reader.option(k, v)
-        df = reader.load()
-        return df
-
-    def advance(self, df) -> int:
-        """Move the high-water mark after a successful batch commit."""
-        mx = df.agg({"seq": "max"}).first()[0]
-        if mx is not None:
-            self.last_seq = int(mx)
-        return self.last_seq
+def offset_row_kind(consumer: str) -> str:
+    """'consumer' for a real delivery consumer's offset row, else the
+    _NOT_CONSUMER kind its name matches (first match wins)."""
+    for kind, pattern in _NOT_CONSUMER:
+        if re.fullmatch(re.escape(pattern).replace("%", ".*"), consumer):
+            return kind
+    return "consumer"

@@ -36,9 +36,8 @@ range query — the classic JDBC partitioned read); steady-state batches
 are capped by maxRowsPerBatch (rate limiting by construction, the
 micro-batch analog of the reference's unbuffered-channel backpressure,
 server.go:291). On a real cluster the postgres backend needs TCP
-conninfo + client binaries on executors, or swap in the JDBC path
-(`sources.outbox.OutboxPoller`) — partition planning and offsets are
-backend-agnostic.
+conninfo + client binaries on executors — partition planning and
+offsets are backend-agnostic.
 """
 
 from __future__ import annotations

@@ -34,7 +34,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .outbox import _check_ident, filter_tables
+from .outbox import CONSUMER_ROWS_SQL, _check_ident, filter_tables
 
 LOCAL_OUTBOX_TABLE = "pqstream_outbox"
 LOCAL_OFFSET_TABLE = "pqstream_consumer_offset"
@@ -120,7 +120,7 @@ def local_remove_trigger_sql(table: str) -> list[str]:
 
 
 class LocalCaptureManager:
-    """sqlite trigger lifecycle — same contract as CaptureManager:
+    """sqlite trigger lifecycle — same contract as PgCaptureManager:
     remove-then-install startup (cmd/pqsd/main.go:95-102), install with
     zero matching tables is an error (server.go:136-139)."""
 
@@ -253,7 +253,7 @@ def raw_events_from_outbox(df: DataFrame) -> DataFrame:
 class LocalOutboxPoller:
     """Bounded incremental reads of the sqlite outbox over DB-API.
 
-    The micro-batch contract matches OutboxPoller (sources/outbox.py):
+    The micro-batch contract matches PgOutboxPoller (sources/outbox_pg.py):
     each call reads (last_seq, last_seq + max_rows]; the caller commits
     the batch downstream, then `advance()`s the high-water mark —
     restart-from-checkpoint is re-creating the poller with the stored
@@ -352,10 +352,7 @@ class LocalOutboxPoller:
         consumer and is excluded from the mark."""
         row = self.conn.execute(
             f"SELECT MIN(last_seq) FROM {LOCAL_OFFSET_TABLE} "
-            "WHERE consumer NOT LIKE '%#bootstrap' "
-            "AND consumer NOT LIKE '%#reportfloor' "
-            "AND consumer NOT LIKE '%#lease' "
-            "AND consumer NOT LIKE '%#logical%'"
+            f"WHERE {CONSUMER_ROWS_SQL}"
         ).fetchone()
         low = row[0] if row else None
         if low is None or low <= 0:

@@ -10,10 +10,10 @@ DDL (`sources/outbox.py`) against a real server:
 - **Transport is a `psql` subprocess** — this container ships the
   PostgreSQL 15 server binaries (`pg_ctl`, `postgres`, `psql`) but no
   Python driver (psycopg2) and no JDBC jar, so `psql --csv` with an
-  explicit NULL marker is the supported execution path here. On a real
-  cluster you'd use `sources.outbox.OutboxPoller` (partitioned JDBC
-  reads); this backend is the driver-less equivalent with the same
-  bounded `(last_seq, last_seq + max_rows]` batch contract.
+  explicit NULL marker is the supported execution path here. Batches
+  are bounded `(last_seq, last_seq + max_rows]` reads; the scale path
+  is `PgOutboxPoller.read_batch_distributed` (`--parallel-read N`:
+  N psql sub-range reads on executors).
 - **Server lifecycle** (`EphemeralPostgres`) mirrors the reference's
   test topology: throwaway cluster per suite, trust auth on a private
   unix socket, `listen_addresses=''` (no TCP). Postgres refuses to run
@@ -51,6 +51,7 @@ from datetime import datetime, timezone
 
 from .outbox import (
     CLAIM_SEQ_FUNCTION_SQL,
+    CONSUMER_ROWS_SQL,
     CREATE_OUTBOX_SQL,
     DISCOVER_TABLES_SQL,
     MIGRATE_OUTBOX_OP_CHECK_SQL,
@@ -316,7 +317,7 @@ class EphemeralPostgres:
 class PgCaptureManager:
     """Trigger lifecycle on live Postgres — executes the golden-pinned
     DDL from sources/outbox.py verbatim. Same contract as
-    CaptureManager/LocalCaptureManager: remove-then-install startup
+    LocalCaptureManager: remove-then-install startup
     (cmd/pqsd/main.go:95-102), install with zero matching tables is an
     error (server.go:136-139). All install DDL ships in ONE psql
     invocation wrapped in a transaction, so a half-installed trigger
@@ -549,7 +550,7 @@ class PgOutboxPoller:
     (at-least-once), and the seq-named idempotent sink collapses the
     replay to exactly-once effect. The batch is bounded by max_rows, so
     the driver-side CSV materialization is capped by construction; the
-    unbounded-scale path is the JDBC OutboxPoller.
+    scale path is read_batch_distributed (`--parallel-read N`).
 
     Concurrent writers: every batch's upper bound comes from PgSeqFence
     — the watermark never passes a seq a still-open transaction could
@@ -793,10 +794,7 @@ class PgOutboxPoller:
         keys on the reader's plain consumer row, advanced at commit()."""
         low = self.runner.scalar(
             f"SELECT MIN(last_seq) FROM {PG_OFFSET_TABLE} "
-            "WHERE consumer NOT LIKE '%#bootstrap' "
-            "AND consumer NOT LIKE '%#reportfloor' "
-            "AND consumer NOT LIKE '%#lease' "
-            "AND consumer NOT LIKE '%#logical%'"
+            f"WHERE {CONSUMER_ROWS_SQL}"
         )
         if low is None or int(low) <= 0:
             return 0
@@ -1217,8 +1215,7 @@ def pg_read_outbox_distributed(
 
     - `psql` must exist on every executor host and `conninfo` must be
       reachable from them (on local[k] both hold trivially; on a real
-      cluster this means TCP conninfo + client binaries, or switch to
-      the JDBC path `sources.outbox.OutboxPoller` documents).
+      cluster this means TCP conninfo + client binaries).
     - seq is a monotonically-assigned BIGSERIAL, so contiguous ranges
       partition the table with no overlap and no misses; per-range
       `ORDER BY seq` keeps each partition internally ordered (global

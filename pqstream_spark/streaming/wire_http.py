@@ -17,7 +17,7 @@ and renderer; nothing below the framing changes.
 Backpressure semantics DEFAULT to the reference's: the event loop
 writes to each client inline, so a slow client delays the batch for
 everyone (the unbuffered channel at server.go:291). Bounded
-micro-batches (maxFilesPerTrigger / OutboxPoller.max_rows) cap how
+micro-batches (maxFilesPerTrigger / PgOutboxPoller.max_rows) cap how
 much a stall can hold in flight. Unlike the reference, a client may
 opt OUT of head-of-line blocking per connection —
 `/listen?tables=...&policy=drop-oldest|disconnect-slow|block&buffer=N`

@@ -232,11 +232,41 @@ def test_cli_listen_http_serves_wire(spark, tmp_path):
     assert json.loads(got["line"])["table"] == "users"
 
 
-def test_cli_replay_from_rejected_on_directory_backend(tmp_path, capsys):
+@pytest.mark.parametrize("connect, flag", [
+    ("dir", ["--replay-from", "0"]),
+    ("sqlite", ["--listen-http", "0"]),
+    ("postgres", ["--listen-http", "0"]),
+    ("sqlite", ["--checkpoint", "cp"]),
+    ("postgres", ["--checkpoint", "cp"]),
+    ("sqlite", ["--txn-consistent"]),
+    ("dir", ["--bootstrap"]),
+    ("dir", ["--compact"]),
+    ("dir", ["--consumer", "a"]),
+], ids=lambda v: v if isinstance(v, str) else v[0].lstrip("-"))
+def test_cli_rejects_inapplicable_flag(tmp_path, capsys, connect, flag):
+    """A flag the selected backend would silently ignore exits 2 and
+    names the flag — before any database, trigger or file is touched."""
+    db_path = tmp_path / "app.db"
     os.makedirs(tmp_path / "d")
-    rc = main(["--connect", str(tmp_path / "d"), "--replay-from", "0"])
+    source = {"dir": str(tmp_path / "d"), "sqlite": f"sqlite:{db_path}",
+              "postgres": "postgres:host=/nonexistent dbname=x"}[connect]
+    out = tmp_path / "out"
+    rc = main(["--connect", source, "--out", str(out), "--once", *flag])
     assert rc == 2
-    assert "--replay-from" in capsys.readouterr().err
+    assert flag[0] in capsys.readouterr().err
+    assert not db_path.exists() and not out.exists()
+
+
+def test_flag_table_covers_every_optional_flag():
+    """Every flag that is off by default (None or False) has an entry
+    in the applicability table, so none can be silently ignored."""
+    import pqstream_spark.__main__ as cli
+
+    for action in build_parser()._actions:
+        if not action.option_strings or action.required:
+            continue  # --help, and --connect (always read)
+        if action.default is None or action.default is False:
+            assert action.option_strings[0] in cli._FLAGS, action.option_strings
 
 
 def test_cli_bootstrap_snapshot_then_stream(spark, tmp_path):

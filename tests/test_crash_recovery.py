@@ -159,6 +159,36 @@ def test_sigkill_restart_changelog_dir_exactly_once(spark, tmp_path):
     )
 
 
+def test_sigint_stops_daemon_gracefully(spark, tmp_path):
+    """SIGINT is a graceful stop, like SIGTERM. The daemon creates its
+    SparkContext after main() installed the stop handler, and pyspark
+    replaces SIGINT with a handler that raises KeyboardInterrupt — the
+    daemon must put its own back, drain and exit 0 without a
+    traceback."""
+    import signal
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    log = str(tmp_path / "daemon.log")
+    os.makedirs(src)
+    f1 = _stage_events_file(spark, tmp_path, "f1", 0, 200)
+    shutil.copy(f1, os.path.join(src, "b1.parquet"))
+    daemon = _spawn_daemon(["--connect", src, "--out", out], log)
+    try:
+        _wait(lambda: len(_out_lines(out)) >= 200, 180,
+              "first batch to drain")
+        daemon.send_signal(signal.SIGINT)
+        rc = daemon.wait(timeout=120)
+    finally:
+        if daemon.poll() is None:
+            daemon.kill()
+            daemon.wait(timeout=30)
+    with open(log) as f:
+        text = f.read()
+    assert rc == 0, text[-2000:]
+    assert "KeyboardInterrupt" not in text, text[-2000:]
+
+
 def test_sigkill_restart_sqlite_exactly_once(spark, tmp_path):
     """SIGKILL the sqlite-capture daemon between batches, restart on the
     same database: the durable consumer offset resumes, a replayed

@@ -1,53 +1,17 @@
-"""Capture-side DDL lifecycle (SURVEY §2 S1/S3/S4) — pure SQL text +
-a fake DB-API connection; mirrors the reference's DDL tests
-(/root/reference/server_test.go:362-406) without a live Postgres."""
+"""Capture-side DDL (SURVEY §2 S1/S3/S4) — pure SQL text, no database;
+mirrors the reference's DDL tests (server_test.go:362-406). The
+install/remove lifecycle runs against a live server in
+tests/test_outbox_pg.py."""
 
 from __future__ import annotations
 
 import pytest
 
 from pqstream_spark.sources.outbox import (
-    CaptureManager,
     filter_tables,
     install_trigger_sql,
     remove_trigger_sql,
 )
-
-
-class FakeCursor:
-    def __init__(self, tables, payload_type="json"):
-        self.tables = tables
-        self.payload_type = payload_type
-        self.executed = []
-
-    def execute(self, sql):
-        self.executed.append(sql)
-        self._last = sql
-
-    def fetchall(self):
-        assert "information_schema" in self._last
-        if "information_schema.columns" in self._last:
-            # the json-type verification: an empty result (fresh install,
-            # no outbox yet) or the existing columns' types
-            if not self.tables:
-                return []
-            return [
-                ("payload", self.payload_type),
-                ("previous", self.payload_type),
-            ]
-        return [(t,) for t in self.tables]
-
-
-class FakeConn:
-    def __init__(self, tables, payload_type="json"):
-        self._cur = FakeCursor(tables, payload_type)
-        self.commits = 0
-
-    def cursor(self):
-        return self._cur
-
-    def commit(self):
-        self.commits += 1
 
 
 def test_trigger_sql_shape():
@@ -70,47 +34,30 @@ def test_table_regexp_filter():
     assert filter_tables(names, "orders") == ["orders_2024"]
 
 
-def test_install_remove_lifecycle():
-    conn = FakeConn(["notes", "users"])
-    mgr = CaptureManager(conn, table_regexp="^notes$")
-    installed = mgr.install()
-    assert installed == ["notes"]
-    sqls = conn._cur.executed
-    assert any("CREATE TABLE IF NOT EXISTS pqstream_outbox" in s for s in sqls)
-    assert any("CREATE OR REPLACE FUNCTION pqstream_outbox_capture" in s for s in sqls)
-    assert any("CREATE TRIGGER" in s and '"notes"' in s for s in sqls)
-    assert conn.commits == 1
-    removed = mgr.remove()
-    assert removed == ["notes"]
+def test_consumer_row_rule_sql_matches_python():
+    """compact() filters offset rows with CONSUMER_ROWS_SQL and --lag
+    classifies them with offset_row_kind: both must agree on which rows
+    are real delivery consumers."""
+    import sqlite3
 
+    from pqstream_spark.sources.outbox import (
+        CONSUMER_ROWS_SQL,
+        offset_row_kind,
+    )
 
-def test_install_no_match_errors():
-    conn = FakeConn(["notes"])
-    mgr = CaptureManager(conn, table_regexp="^nope$")
-    with pytest.raises(RuntimeError):
-        mgr.install()
-
-
-def test_install_applies_claim_seq_migration():
-    """ADVICE r8 (medium): the DB-API install path must apply the
-    claim-seq function + seq DEFAULT migration like PgCaptureManager —
-    otherwise outboxes installed via this path keep the bare nextval
-    default and the xid-less direct-INSERT claim window stays open
-    against PgSeqFence."""
-    conn = FakeConn(["notes"])
-    CaptureManager(conn, table_regexp="^notes$").install()
-    sqls = conn._cur.executed
-    assert any("pqstream_claim_seq" in s and "CREATE OR REPLACE" in s for s in sqls)
-    assert any("SET DEFAULT pqstream_claim_seq()" in s for s in sqls)
-
-
-def test_install_rejects_legacy_jsonb_outbox():
-    """A legacy jsonb-typed outbox must fail loudly before any trigger
-    attaches (same contract as PgCaptureManager, ADVICE r7)."""
-    conn = FakeConn(["notes"], payload_type="jsonb")
-    with pytest.raises(RuntimeError, match="jsonb"):
-        CaptureManager(conn, table_regexp="^notes$").install()
-    assert not any("CREATE TRIGGER" in s for s in conn._cur.executed)
+    names = ["daemon", "analytics", "daemon#bootstrap",
+             "daemon@logical@s3#bootstrap", "ds#reportfloor", "ds#lease",
+             "daemon@pq_slot#logicalseq", "daemon@pq_slot#logicallsn",
+             "boot#bootstrapped", "a#lease#x"]
+    conn = sqlite3.connect(":memory:")
+    conn.execute("CREATE TABLE o (consumer TEXT)")
+    conn.executemany("INSERT INTO o VALUES (?)", [(n,) for n in names])
+    by_sql = {r[0] for r in conn.execute(
+        f"SELECT consumer FROM o WHERE {CONSUMER_ROWS_SQL}")}
+    assert by_sql == {n for n in names if offset_row_kind(n) == "consumer"}
+    assert by_sql == {"daemon", "analytics", "boot#bootstrapped",
+                      "a#lease#x"}
+    assert offset_row_kind("daemon@pq_slot#logicallsn") == "logical"
 
 
 def test_txn_assembler_exact_completion_unit(spark):

@@ -9,7 +9,7 @@ integration tests):
    write: one row into the table, one into the outbox);
 2. poller drain throughput — outbox rows/s through
    PgOutboxPoller.read_batch into a Spark frame (psql CSV transport;
-   the JDBC OutboxPoller is the cluster-scale path);
+   `--parallel-read N` is the executor-side scale path);
 3. NOTIFY transport delivery rate — events/s through a live LISTEN
    session (the reference's wire), including the two-tier degradation
    trigger cost.

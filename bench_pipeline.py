@@ -1,7 +1,8 @@
 """Product-surface throughput: what the curation and vector-index
 surfaces actually process per second at sf0.1 — the numbers a user
 sizing a real deployment asks for, complementing bench.py (per-query
-latency) and bench_wire.py (fan-out delivery rate).
+latency) and perfbench's listen_fanout workload (fan-out delivery
+rate, `python3 perfbench/run.py --workload listen_fanout`).
 
     python bench_pipeline.py
 

@@ -390,10 +390,10 @@ def _spark(stop: threading.Event):
 
 def _print_batch(batch_df, epoch: int) -> None:
     """`--out -`: one JSON line per event on stdout, in seq order."""
-    from .streaming.sinks import event_to_json_line
+    from .streaming.sinks import event_to_json_line, seq_ordered_rows
 
-    for r in batch_df.orderBy("seq").toLocalIterator():
-        print(event_to_json_line(r.asDict()), flush=True)
+    for d in seq_ordered_rows(batch_df):
+        print(event_to_json_line(d), flush=True)
 
 
 def _sink(out: str, prefix: str = "batch"):
@@ -1034,6 +1034,8 @@ def _run_changelog_dir(args, stop: threading.Event) -> int:
                 table_regexp=args.tables or ".*",
                 typed_wire=True,
             )
+            # a range-partitioned orderBy, not seq_ordered_rows: this
+            # scan is bounded by retention, not by one micro-batch
             it = (
                 df.filter(F.col("seq") >= from_seq)
                 .orderBy("seq")

@@ -4,7 +4,9 @@ operator (SURVEY.md §2.2: the reference exposes NO user-facing UDF
 surface — its only extension point is an in-process Go callback).
 
 - scalar pandas UDF: operators/merge_patch.merge_patch_json (Arrow
-  batches, RFC-7386 over nested JSON)
+  batches over merge_patch_text, RFC-7386 over nested JSON). No daemon
+  plan calls it: the wire renderer patches each UPDATE row on the
+  driver with merge_patch_text itself.
 - UDTF (table function): sentence split — one doc row → N sentence rows
 - grouped-agg pandas UDF (UDAF): weighted_mean — custom aggregate over
   Arrow columns

@@ -6,17 +6,20 @@ the patch transforms NEW→OLD, so **`changes` carries the OLD values of
 exactly the fields that changed** (SURVEY.md §1.4; confirmed by
 README.md:45,57).
 
-Two implementations:
+Two patch shapes:
 
 1. `merge_patch_map(payload, previous)` — flat `map<string,string>`
    rows via JVM-side higher-order functions (map_filter / map_concat),
    zero Python in the hot path. This covers the `row_to_json` common
    case (relational rows are one level deep).
 
-2. `merge_patch_json(a_json, b_json)` — full recursive RFC-7386 over
-   arbitrary nested JSON text, as an Arrow-batched pandas UDF, for
-   json/jsonb-typed columns. Slow path by design; only routed to when
-   payload_json is nested.
+2. `merge_patch_text(a_json, b_json)` — full recursive RFC-7386 over
+   arbitrary nested JSON text, one row at a time. A wire sink calls it
+   while it renders each row on the driver
+   (`streaming/sinks.event_to_json_line`), the one place the reference
+   pays for it too (server.go:236). `merge_patch_json` wraps the same
+   function as an Arrow-batched pandas UDF for plans that want the
+   patch as a column.
 
 RFC-7386 semantics (patch transforming a→b):
 - key in b with value differing from a[key]    → patch[key] = b[key]
@@ -79,23 +82,25 @@ def _merge_patch_obj(a, b):
     return patch
 
 
+def merge_patch_text(a_s: str | None, b_s: str | None) -> str | None:
+    """RFC-7386 patch a→b over JSON text, rendered with sorted keys.
+    Both sides NULL → `{}`; either side unparseable → None."""
+    if a_s is None and b_s is None:
+        return "{}"
+    try:
+        a = json.loads(a_s) if a_s else {}
+        b = json.loads(b_s) if b_s else {}
+    except (ValueError, TypeError):
+        # parity with server.go:237-240: patch errors are logged,
+        # the event is still emitted without changes
+        return None
+    return json.dumps(_merge_patch_obj(a, b), separators=(",", ":"), sort_keys=True)
+
+
 @F.pandas_udf(T.StringType())
 def merge_patch_json(a_json: pd.Series, b_json: pd.Series) -> pd.Series:
-    """Full-fidelity RFC-7386 over JSON text (nested objects supported)."""
-
-    def one(a_s, b_s):
-        if a_s is None and b_s is None:
-            return "{}"
-        try:
-            a = json.loads(a_s) if a_s else {}
-            b = json.loads(b_s) if b_s else {}
-        except (ValueError, TypeError):
-            # parity with server.go:237-240: patch errors are logged,
-            # the event is still emitted without changes
-            return None
-        return json.dumps(_merge_patch_obj(a, b), separators=(",", ":"), sort_keys=True)
-
-    return pd.Series([one(x, y) for x, y in zip(a_json, b_json)])
+    """merge_patch_text over Arrow batches (nested objects supported)."""
+    return pd.Series([merge_patch_text(x, y) for x, y in zip(a_json, b_json)])
 
 
 def with_changes(df: DataFrame, typed_wire: bool = False) -> DataFrame:
@@ -103,25 +108,18 @@ def with_changes(df: DataFrame, typed_wire: bool = False) -> DataFrame:
 
     Mirrors handleEvent's Raw→public conversion (server.go:227-241).
 
-    typed_wire=True additionally computes `changes_json` — the full
-    recursive RFC-7386 patch over the exact JSON text (nested objects,
-    preserved number/null types) — for sinks that must render the
-    reference's wire format byte-for-byte (jsonpb prints typed JSON,
-    cmd/pqs/main.go:66-76). It routes every UPDATE row through the
-    Arrow-batched pandas UDF, so it's off by default: the JVM-side map
-    patch is the hot path; pay the serialization cost only at a wire
-    sink, exactly where the reference pays it."""
+    typed_wire=True keeps `previous_json` on the row, for sinks that
+    must render the reference's wire format byte-for-byte (jsonpb
+    prints typed JSON, cmd/pqs/main.go:66-76): the renderer computes an
+    UPDATE's full recursive patch from payload_json/previous_json with
+    merge_patch_text (nested objects, preserved number/null types) and
+    falls back to the map `changes` when either side does not parse.
+    The plan itself stays all-JVM either way — no Python worker."""
     changes = F.when(
         F.col("op") == "UPDATE",
         merge_patch_map(F.col("payload"), F.col("previous")),
     )
     out = df.withColumn("changes", changes)
     if typed_wire:
-        out = out.withColumn(
-            "changes_json",
-            F.when(
-                F.col("op") == "UPDATE",
-                merge_patch_json(F.col("payload_json"), F.col("previous_json")),
-            ),
-        )
+        return out.drop("previous")
     return out.drop("previous", "previous_json")

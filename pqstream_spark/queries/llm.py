@@ -1219,7 +1219,10 @@ def _embed_hash_sql(spark: bool, bk: str | None = None) -> str:
     # pay a bucket-key shuffle; under size-first AQE coalescing that
     # tiny-byte exchange collapses to one partition and serializes the
     # dot-product aggregate (measured: the embed_hash branch-minus-
-    # shared 1.26 s → 2.89 s). The hint removes the exchange outright.
+    # shared 1.26 s → 2.89 s). The hint flips the join to build on the
+    # broadcast query side; it does not remove an exchange — the
+    # before/after plan dumps (plans/r15/sim_ann_lsh_quantized_*.txt)
+    # both carry 38 Exchange nodes.
     bhint = "/*+ BROADCAST(a) */ " if spark else ""
     return f"""
 WITH {prefix}nrm AS (SELECT doc_id, SUM(v * v) AS n2 FROM bk GROUP BY doc_id),

@@ -12,10 +12,12 @@ from __future__ import annotations
 
 import json
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..operators.merge_patch import merge_patch_text
 
 
 def _sorted_obj(v):
@@ -34,9 +36,14 @@ def event_to_json_line(row: dict, include_seq: bool = False) -> str:
     proto field order (pqstream.proto:37-47 — schema, table, op, id,
     payload, changes), empty fields omitted, Struct keys sorted.
 
-    payload/changes come from the exact-JSON projections when present
-    (payload_json / changes_json) so numbers stay numbers and nulls
-    stay nulls — the map<string,string> fallback loses JSON types.
+    payload comes from the exact-JSON projection when present
+    (payload_json) so numbers stay numbers and nulls stay nulls — the
+    map<string,string> fallback loses JSON types. An UPDATE row that
+    carries previous_json (handle_events(typed_wire=True)) gets its
+    `changes` as the recursive patch of payload_json → previous_json,
+    computed here on the driver; when either side does not parse it
+    falls back to the map `changes`, as the reference emits the event
+    without a patch (server.go:237-240).
 
     include_seq=True prepends the outbox seq — NOT part of the
     reference wire format (its proto has no cursor field, which is WHY
@@ -54,38 +61,51 @@ def event_to_json_line(row: dict, include_seq: bool = False) -> str:
         out["op"] = row["op"]
     if row.get("id") is not None:
         out["id"] = row["id"]
-    for key, json_col, map_col in (
-        ("payload", "payload_json", "payload"),
-        ("changes", "changes_json", "changes"),
-    ):
-        if row.get(json_col) is not None:
-            out[key] = _sorted_obj(json.loads(row[json_col]))
-        elif row.get(map_col) is not None:
-            out[key] = _sorted_obj(dict(row[map_col]))
+    if row.get("payload_json") is not None:
+        out["payload"] = _sorted_obj(json.loads(row["payload_json"]))
+    elif row.get("payload") is not None:
+        out["payload"] = _sorted_obj(dict(row["payload"]))
+    patch = None
+    if row.get("op") == "UPDATE" and "previous_json" in row:
+        patch = merge_patch_text(row.get("payload_json"), row["previous_json"])
+    if patch is not None:
+        out["changes"] = _sorted_obj(json.loads(patch))
+    elif row.get("changes") is not None:
+        out["changes"] = _sorted_obj(dict(row["changes"]))
     return json.dumps(out, separators=(",", ":"))
+
+
+def seq_ordered_rows(batch_df: DataFrame) -> Iterator[dict]:
+    """A micro-batch's rows as dicts, in `seq` order — the one ordered
+    hop every foreachBatch sink shares. Global order needs a single
+    partition, acceptable ONLY at the final sink hop (SURVEY.md §3.4):
+    one exchange into one sorted partition and one result job, with no
+    range-partition sample job in front. Rows stream to the driver, so
+    its memory is bounded by one micro-batch (`maxFilesPerTrigger`, or
+    the poller's `max_rows`), not by the retained changelog."""
+    for r in (
+        batch_df.repartition(1).sortWithinPartitions("seq").toLocalIterator()
+    ):
+        yield r.asDict()
 
 
 def jsonl_dir_writer(out_dir: str) -> Callable[[DataFrame, int], None]:
     """foreachBatch sink: one .jsonl file per micro-batch, rows in seq
-    order. Global order across a micro-batch needs a single partition —
-    acceptable ONLY at the final sink hop (SURVEY.md §3.4); everything
-    upstream stays parallel."""
+    order (seq_ordered_rows); everything upstream stays parallel."""
     os.makedirs(out_dir, exist_ok=True)
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # stream the sorted batch through the driver a partition at a
-        # time (toLocalIterator) — the file is written incrementally, so
-        # driver memory is bounded by one partition, not the micro-batch.
-        # Written to a .tmp then renamed: a SIGKILL mid-batch leaves
-        # only tmp junk (readers match *.jsonl), and the checkpoint's
-        # re-run of the same epoch rewrites the same final name — the
-        # idempotent-sink half of the exactly-once contract.
+        # Written incrementally to a .tmp, then renamed: a SIGKILL
+        # mid-batch leaves only tmp junk (readers match *.jsonl), and
+        # the checkpoint's re-run of the same epoch rewrites the same
+        # final name — the idempotent-sink half of the exactly-once
+        # contract.
         path = os.path.join(out_dir, f"batch-{epoch_id:08d}.jsonl")
         tmp = path + ".tmp"
         wrote = False
         with open(tmp, "w") as f:
-            for r in batch_df.orderBy("seq").toLocalIterator():
-                f.write(event_to_json_line(r.asDict()) + "\n")
+            for d in seq_ordered_rows(batch_df):
+                f.write(event_to_json_line(d) + "\n")
                 wrote = True
         if wrote:
             os.replace(tmp, path)
@@ -123,8 +143,7 @@ def jsonl_seq_writer(
         tmp = os.path.join(out_dir, f".inflight-{prefix}-{epoch_id}.tmp")
         lo = hi = None
         with open(tmp, "w") as f:
-            for r in batch_df.orderBy("seq").toLocalIterator():
-                d = r.asDict()
+            for d in seq_ordered_rows(batch_df):
                 if lo is None:
                     lo = d["seq"]
                 hi = d["seq"]
@@ -147,8 +166,8 @@ def callback_sink(cb: Callable[[dict], bool]) -> Callable[[DataFrame, int], None
     the rest of the batch."""
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        for r in batch_df.orderBy("seq").toLocalIterator():
-            if not cb(r.asDict()):
+        for d in seq_ordered_rows(batch_df):
+            if not cb(d):
                 break
 
     return write
@@ -179,8 +198,8 @@ class StompForwarder:
 
     def foreach_batch(self) -> Callable[[DataFrame, int], None]:
         def write(batch_df: DataFrame, epoch_id: int) -> None:
-            for r in batch_df.orderBy("seq").toLocalIterator():
-                self.client.send(self.queue, event_to_json_line(r.asDict()))
+            for d in seq_ordered_rows(batch_df):
+                self.client.send(self.queue, event_to_json_line(d))
 
         return write
 

@@ -53,59 +53,52 @@ EVENTS_FILE_SCHEMA = _events_file_schema(T.LongType())
 # in-place part-file rewrite, or files landing inside a partition
 # subdirectory, would leave it unchanged — so the directory signature
 # additionally folds in a recursive (part-file count, max mtime_ns)
-# over *.parquet. That is its own full walk, one stat per part-file,
-# paid on every call, memo hit or not: O(files), on top of
-# _has_parquet's walk (which stops at the first part-file). A fresh
-# process starts empty. Never holds data, only a dtype string.
+# over *.parquet. The same walk's part-file count answers whether a
+# footer exists to read at all. It stats every part-file on every call,
+# memo hit or not: O(files).
+# A fresh process starts empty. Never holds data, only a dtype string.
 _TS_DTYPE_MEMO: dict[tuple, str] = {}
 
 
-def _stat_signature(path: str) -> tuple | None:
-    """Memo key for `path`: file → (path, mtime_ns, size); directory →
-    the same plus a recursive (count, max mtime_ns) over part-files,
-    so in-place rewrites and nested additions change the key."""
+def _scan_parquet(path: str) -> tuple[bool, tuple | None]:
+    """One walk over `path`: (is there a parquet footer to read, memo
+    key). The key is file → (path, mtime_ns, size); directory → the same
+    plus a recursive (count, max mtime_ns) over part-files, so in-place
+    rewrites and nested additions change it. A part-file that vanishes
+    mid-walk (racing writer) yields key None: read, but don't memoize."""
     import os
 
     try:
         st = os.stat(path)
-        key: tuple = (path, st.st_mtime_ns, st.st_size)
-        if os.path.isdir(path):
-            n, mx = 0, 0
-            for root, _dirs, files in os.walk(path):
-                for f in files:
-                    if f.endswith(".parquet") and not f.startswith((".", "_")):
-                        n += 1
-                        try:
-                            m = os.stat(os.path.join(root, f)).st_mtime_ns
-                        except OSError:
-                            return None  # racing writer: don't memoize
-                        mx = max(mx, m)
-            key = (*key, n, mx)
-        return key
     except OSError:
-        return None
+        return False, None
+    key: tuple = (path, st.st_mtime_ns, st.st_size)
+    if not os.path.isdir(path):
+        return os.path.isfile(path), key
+    n, mx = 0, 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                n += 1
+                try:
+                    m = os.stat(os.path.join(root, f)).st_mtime_ns
+                except OSError:
+                    return True, None  # racing writer: don't memoize
+                mx = max(mx, m)
+    return n > 0, (*key, n, mx)
+
+
+def _stat_signature(path: str) -> tuple | None:
+    """The memo key alone (see _scan_parquet)."""
+    return _scan_parquet(path)[1]
 
 
 def _peek_ts_dtype(spark: SparkSession, path: str) -> str:
     """Surfaced dtype of `ts` for parquet at `path`, or the current-era
     default ("timestamp_ntz") when no parquet footer exists to read yet
     (empty or not-yet-created directory)."""
-    import os
-
-    def _has_parquet(p: str) -> bool:
-        if os.path.isfile(p):
-            return True
-        if not os.path.isdir(p):
-            return False
-        for root, _dirs, files in os.walk(p):
-            if any(
-                f.endswith(".parquet") and not f.startswith((".", "_"))
-                for f in files
-            ):
-                return True
-        return False
-
-    if not _has_parquet(path):
+    has_parquet, key = _scan_parquet(path)
+    if not has_parquet:
         import logging
 
         # Surfacing the assumption at runtime: if bigint(nanos)-era files
@@ -117,7 +110,6 @@ def _peek_ts_dtype(spark: SparkSession, path: str) -> str:
             path,
         )
         return "timestamp_ntz"
-    key = _stat_signature(path)
     if key is not None and key in _TS_DTYPE_MEMO:
         return _TS_DTYPE_MEMO[key]
     try:

@@ -27,6 +27,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.filters import compile_or_raise
 from ..pipeline import handle_events
 from ..operators.redact import FieldRedactions
+from .sinks import seq_ordered_rows
 
 
 class SubscriptionManager:
@@ -303,31 +304,28 @@ class Dispatcher:
             },
         }
 
-    def start(self, trigger: dict | None = None) -> StreamingQuery:
-        def dispatch(batch_df: DataFrame, epoch_id: int) -> None:
+    def dispatch_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """The query's foreachBatch function: rows stream to the driver
+        in global seq order — driver memory is bounded by one
+        micro-batch (maxFilesPerTrigger), not the retained changelog —
+        and each is multicast to the surviving subscribers, the
+        reference's event-loop shape (server.go:249-267)."""
+        if not self._subs:
+            return
+        for row in seq_ordered_rows(batch_df):
             if not self._subs:
-                return
-            # toLocalIterator streams the sorted batch one partition at a
-            # time — driver memory is bounded by a partition, not the
-            # micro-batch (collect() here was the classic driver
-            # bottleneck: "many cheap subscribers" routed the full event
-            # stream through one list). Rows arrive in global seq order;
-            # each is multicast to the surviving subscribers — the
-            # reference's event-loop shape (server.go:249-267).
-            for r in batch_df.orderBy("seq").toLocalIterator():
-                if not self._subs:
-                    break
-                row = r.asDict()
-                self.dispatched += 1
-                for name, sub in list(self._subs.items()):
-                    if not sub.pattern.search(row["table_name"] or ""):
-                        continue
-                    if not sub.offer(row):
-                        self.unsubscribe(name)  # False → unsubscribe
+                break
+            self.dispatched += 1
+            for name, sub in list(self._subs.items()):
+                if not sub.pattern.search(row["table_name"] or ""):
+                    continue
+                if not sub.offer(row):
+                    self.unsubscribe(name)  # False → unsubscribe
 
-        writer = self._events.writeStream.foreachBatch(dispatch).queryName(
-            "pqstream_dispatcher"
-        )
+    def start(self, trigger: dict | None = None) -> StreamingQuery:
+        writer = self._events.writeStream.foreachBatch(
+            self.dispatch_batch
+        ).queryName("pqstream_dispatcher")
         if trigger:
             writer = writer.trigger(**trigger)
         self._query = writer.start()

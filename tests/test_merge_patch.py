@@ -74,3 +74,37 @@ def test_merge_patch_json(spark, a, b, expected):
     row = df.select(merge_patch_json(F.col("a"), F.col("b")).alias("p")).first()
     got = json.loads(row["p"]) if row["p"] is not None else None
     assert got == expected
+
+
+@pytest.mark.parametrize(
+    "a,b,expected",
+    [
+        # every test_merge_patch_json case, same expected values
+        (None, None, {}),
+        ("{}", "{}", {}),
+        ("{}", '{"foo":"bar"}', {"foo": "bar"}),
+        (
+            '{"o":{"x":1,"y":2},"k":1}',
+            '{"o":{"x":1,"y":3},"k":1}',
+            {"o": {"y": 3}},
+        ),
+        ('{"gone":{"a":1}}', "{}", {"gone": None}),
+        ('{"v":{"a":1}}', '{"v":2}', {"v": 2}),
+        ("not json", "{}", None),
+        # every test_merge_patch_json_udf_poison case, compared as text
+        ('{"a": 1}', '{"a": 2}', '{"a":2}'),
+        ("{broken", '{"a": 2}', None),
+        ('{"a": 1}', "ALSO BROKEN", None),
+        (None, None, "{}"),
+    ],
+)
+def test_merge_patch_text(a, b, expected):
+    """The per-row function the wire renderer calls and the UDF maps —
+    no Spark session needed."""
+    from pqstream_spark.operators.merge_patch import merge_patch_text
+
+    got = merge_patch_text(a, b)
+    if isinstance(expected, str):
+        assert got == expected
+    else:
+        assert (json.loads(got) if got is not None else None) == expected

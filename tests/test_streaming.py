@@ -557,12 +557,11 @@ def test_upsert_sink_rewrites_only_touched_buckets(spark, tmp_path):
 
 
 def test_dispatcher_multipartition_batch_stays_seq_ordered(spark, tmp_path):
-    """The driver-bottleneck fix (toLocalIterator instead of collect)
-    must preserve the global seq order across a MULTI-partition
-    micro-batch: after the sort, partitions are range-ordered and the
-    iterator drains them in order, holding at most one partition in
-    driver memory — the reference's single-goroutine total order
-    (server.go:258-281) without the reference's single-process cap."""
+    """The ordered sink hop (streaming/sinks.seq_ordered_rows) must
+    preserve the global seq order across a MULTI-partition micro-batch:
+    the batch is sorted into one partition whose rows stream to the
+    driver — the reference's single-goroutine total order
+    (server.go:258-281), with everything upstream still parallel."""
     import os
 
     from pqstream_spark.streaming.source import stream_changelog

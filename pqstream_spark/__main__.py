@@ -237,13 +237,13 @@ def build_parser() -> argparse.ArgumentParser:
     )
     p.add_argument(
         "--txn-consistent", action="store_true",
-        help="postgres outbox backend: emit whole transactions only "
-        "(TxnAssembler over the envelope xid with a one-batch "
-        "holdback) — a multi-row transaction straddling a fenced "
-        "batch ceiling lands in the sink all-or-nothing; the durable "
-        "offset trails one batch so a crash replays (never loses) the "
-        "holdback. The logical transport needs no flag: its batches "
-        "are transaction-atomic by construction",
+        help="postgres outbox backend: emit whole transactions only — "
+        "each poll's fenced ceiling is pulled back to a transaction "
+        "boundary over the envelope xid (the smallest one past the "
+        "per-poll row cap when one transaction is larger), so a "
+        "multi-row transaction lands in one batch, all-or-nothing; "
+        "composes with --parallel-read. The logical transport needs "
+        "no flag: its batches are transaction-atomic by construction",
     )
     p.add_argument(
         "--fence-wait", type=float, default=2.0, metavar="SEC",
@@ -346,9 +346,6 @@ _CHECKS = (
     (lambda a: a.spool_mode and a.spill_dir is None,
      "--spool-mode needs --spill-dir (the spool directory is the durable "
      "copy of drained WAL)"),
-    (lambda a: a.txn_consistent and a.parallel_read is not None,
-     "--txn-consistent reads the envelope xid driver-side "
-     "(read_batch_txn); it does not compose with --parallel-read"),
 )
 
 
@@ -559,7 +556,7 @@ def _run_postgres(args, stop: threading.Event) -> int:
     redactions = _load_redactions(args.redactions)
     poller = outbox_pg.PgOutboxPoller.open_durable(
         runner, consumer=args.consumer or "daemon",
-        fence_wait=args.fence_wait)
+        fence_wait=args.fence_wait, txn_consistent=args.txn_consistent)
     if args.replay_from is not None:
         poller.rewind(args.replay_from)
     emit = _sink(args.out)
@@ -579,30 +576,7 @@ def _run_postgres(args, stop: threading.Event) -> int:
         poller.rewind(hi)
         outbox_pg.pg_mark_bootstrap_done(runner)
 
-    commit = poller.advance
-    if args.txn_consistent:
-        assembler = outbox_pg.TxnAssembler()
-        # xid-extent index at STARTUP, never inside a poll (CREATE
-        # INDEX queues behind open writers — a mid-poll creation would
-        # wedge the loop exactly when transactions are in flight)
-        poller.ensure_xid_index()
-
-        def read():
-            return assembler.feed(poller.read_batch_txn(spark)).drop("xid")
-
-        def commit():
-            # transaction-consistent durability: the read cursor moves
-            # batch by batch, but the PERSISTED offset stays below the
-            # lowest seq the assembler still holds (pending_floor) — a
-            # crash replays the held-back rows instead of losing them;
-            # replayed complete transactions are absorbed by the
-            # seq-keyed idempotent sink and a fresh assembler re-groups
-            # the replayed window.
-            poller.advance_read()
-            floor = assembler.pending_floor()
-            poller.persist_at(
-                poller.last_seq if floor is None else floor - 1)
-    elif args.parallel_read:
+    if args.parallel_read:
         def read():
             return poller.read_batch_distributed(
                 spark, num_partitions=args.parallel_read)
@@ -611,7 +585,7 @@ def _run_postgres(args, stop: threading.Event) -> int:
             return poller.read_batch(spark)
 
     return _serve(args, stop, emit, redactions, _outbox_poll(poller, read),
-                  commit, poller.compact)
+                  poller.advance, poller.compact)
 
 
 def _run_postgres_notify(args, stop: threading.Event, runner) -> int:

@@ -24,13 +24,13 @@ Transaction-consistent mode (round 9): a multi-row transaction whose
 seqs straddle a fenced batch ceiling arrives split across polls —
 folding each poll independently exposes a torn intermediate state (the
 reference's per-row NOTIFY has the same property, so plain mode is
-parity). For all-or-nothing folds, compose with the envelope's writer
-xid: feed `PgOutboxPoller.read_batch_txn` batches through
-`sources.outbox_pg.TxnAssembler` (exact per-txn completion, sound by the
-fence's own finality proof) and fold the assembler's output — each
-emitted batch contains only WHOLE transactions. The logical transport
-needs none of this: its batches are transaction-atomic by
-construction.
+parity). For all-or-nothing folds, read with the transaction-boundary
+rule (`sources.outbox_pg.txn_ceiling`: a `PgOutboxPoller` with
+`txn_consistent=True`, the daemon's `--txn-consistent`, or the
+`pqstream_outbox` DataSource's `txnAligned`) — each batch's ceiling
+sits on a transaction boundary, so it contains only WHOLE
+transactions. The logical transport needs none of this: its batches
+are transaction-atomic by construction.
 """
 
 from __future__ import annotations

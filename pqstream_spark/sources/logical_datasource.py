@@ -14,8 +14,8 @@ Offset model: offsets are the poller's replay-stable dense seqs,
 always TRANSACTION-ALIGNED — `latestOffset` reports only complete-
 transaction boundaries (read_rows never tears a transaction), so a
 micro-batch is all-or-nothing at the transaction level by
-construction: the property the outbox path needs TxnAssembler for,
-free here. `commit(end)` advances the replication slot (and the
+construction: the property the outbox path needs its transaction-
+boundary rule for (`outbox_pg.txn_ceiling`), free here. `commit(end)` advances the replication slot (and the
 (seq, LSN) anchor rows) to the boundary the engine durably finished —
 the slot's `confirmed_flush_lsn` is the crash-safe cursor, so a
 restart replays exactly the unconfirmed window with byte-identical

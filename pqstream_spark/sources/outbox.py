@@ -53,13 +53,14 @@ CREATE TABLE IF NOT EXISTS {OUTBOX_TABLE} (
 # The writer's xid, carried for free by the column DEFAULT (evaluated
 # inside the writing transaction — the trigger and direct INSERTs both
 # get it without touching the trigger body). It lets a consumer
-# reassemble transactions whose seqs straddle a fenced batch ceiling
-# (TxnAssembler, sources/outbox_pg.py): the reference's NOTIFY is
-# per-row with no transaction identity at all, so this is strictly
-# additive. Legacy outboxes get the column via ADD COLUMN (volatile
-# default → PG rewrites the table, stamping historical rows with the
-# migration's own xid — meaningless for old rows, harmless: the
-# assembler only reasons about xids within a live batch sequence).
+# keep transactions whose seqs straddle a fenced batch ceiling whole
+# (the transaction-boundary rule, `txn_ceiling` in sources/outbox_pg.py):
+# the reference's NOTIFY is per-row with no transaction identity at all,
+# so this is strictly additive. Legacy outboxes get the column via ADD
+# COLUMN (volatile default → PG rewrites the table, stamping historical
+# rows with the migration's own xid — meaningless for old rows,
+# harmless: the rule only reasons about xids present in a read window,
+# and each historical row carries its own migration-time xid).
 MIGRATE_OUTBOX_XID_SQL = (
     f"ALTER TABLE {OUTBOX_TABLE} ADD COLUMN IF NOT EXISTS xid BIGINT "
     "NOT NULL DEFAULT pg_current_xact_id()::text::bigint"

@@ -24,11 +24,13 @@ Backends:
   offset never passes a seq a still-open transaction could commit
   below (BIGSERIAL seq order != commit order), so checkpointed
   offsets stay loss-free under concurrent writers — the same fix the
-  poller carries. Partition reads run `psql --csv` ON THE EXECUTORS
-  (each InputPartition is one bounded seq sub-range, planned from row
-  quantiles so sparse seq spaces still balance), zero driver
-  materialization — the engine-managed-offset form of
-  `pg_read_outbox_distributed`.
+  poller carries. Partition reads run ON THE EXECUTORS (each
+  InputPartition is one bounded seq sub-range, planned from row
+  quantiles so sparse seq spaces still balance, and read by the
+  backend's one range read, `outbox_rows`), zero driver
+  materialization — the engine-managed-offset form of the daemon's
+  `--parallel-read`. `txnAligned` pulls each reported offset back to
+  a transaction boundary with the poller's rule (`txn_ceiling`).
 
 Scale shape: the seq range splits into `numPartitions` slices so a
 large backlog is read in parallel (each executor runs one bounded
@@ -56,6 +58,7 @@ from .outbox_local import (
     LOCAL_OFFSET_TABLE,
     LOCAL_OUTBOX_TABLE,
     OUTBOX_BATCH_SCHEMA,
+    outbox_rows as sqlite_outbox_rows,
 )
 
 
@@ -89,65 +92,6 @@ def _split_url(url: str) -> tuple[str, str]:
 class SeqRange(InputPartition):
     lo: int  # exclusive
     hi: int  # inclusive
-
-
-def _read_range_sqlite(url: str, lo: int, hi: int):
-    from datetime import datetime
-
-    conn = _connect(url)
-    try:
-        cur = conn.execute(
-            f"SELECT seq, ts, schema_name, table_name, op, id, "
-            f"payload, previous FROM {LOCAL_OUTBOX_TABLE} "
-            f"WHERE seq > ? AND seq <= ? ORDER BY seq",
-            (lo, hi),
-        )
-        for seq, ts, schema_name, table_name, op, id_, payload, prev in cur:
-            yield (
-                int(seq),
-                datetime.fromisoformat(ts.replace("Z", "+00:00")).replace(
-                    tzinfo=None
-                ),
-                schema_name,
-                table_name,
-                op,
-                id_,
-                payload,
-                prev,
-            )
-    finally:
-        conn.close()
-
-
-def _read_range_pg(conninfo: str, lo: int, hi: int):
-    """One bounded psql CSV read (PsqlRunner.query_csv — the single
-    home of the psql invocation contract), ON the executor the
-    partition was scheduled to (the reader object is pickled there) —
-    rows never pass through the driver. Safe under concurrent writers
-    because the planned range was fenced: every seq <= hi is final, so
-    this late-running read sees exactly the planned row set."""
-    from .outbox import OUTBOX_TABLE
-    from .outbox_pg import PsqlRunner, _parse_pg_ts
-
-    rows = PsqlRunner(conninfo).query_csv(
-        f"SELECT seq, ts, schema_name, table_name, op, id, "
-        f"payload::text AS payload_json, "
-        f"previous::text AS previous_json "
-        f"FROM {OUTBOX_TABLE} "
-        f"WHERE seq > {int(lo)} AND seq <= {int(hi)} "
-        f"ORDER BY seq"
-    )
-    for r in rows:
-        yield (
-            int(r["seq"]),
-            _parse_pg_ts(r["ts"]),
-            r["schema_name"],
-            r["table_name"],
-            r["op"],
-            r["id"],
-            r["payload_json"],
-            r["previous_json"],
-        )
 
 
 class _ReaderCommon:
@@ -191,9 +135,16 @@ class _ReaderCommon:
         if partition.hi <= partition.lo:
             return
         if self._backend == "postgres":
-            yield from _read_range_pg(self._target, partition.lo, partition.hi)
-        else:
-            yield from _read_range_sqlite(self._url, partition.lo, partition.hi)
+            from .outbox_pg import PsqlRunner, outbox_rows
+
+            yield from outbox_rows(PsqlRunner(self._target), partition.lo,
+                                   partition.hi)
+            return
+        conn = _connect(self._url)
+        try:
+            yield from sqlite_outbox_rows(conn, partition.lo, partition.hi)
+        finally:
+            conn.close()
 
 
 class OutboxStreamReader(_ReaderCommon, DataSourceStreamReader):
@@ -218,16 +169,10 @@ class OutboxStreamReader(_ReaderCommon, DataSourceStreamReader):
                 "outbox is single-writer and carries no xid)"
             )
         if self._txn_aligned:
-            # xid extent lookups as index probes; created HERE (reader
-            # construction), never inside a poll — CREATE INDEX queues
-            # behind open writers and would wedge the trigger loop
-            from .outbox_pg import OUTBOX_TABLE as _OT
-            from .outbox_pg import PsqlRunner as _PR
+            # at reader construction, never inside a poll (see the helper)
+            from .outbox_pg import PsqlRunner, ensure_xid_index
 
-            _PR(self._target).sql(
-                f"CREATE INDEX IF NOT EXISTS {_OT}_xid_idx "
-                f"ON {_OT} (xid);"
-            )
+            ensure_xid_index(PsqlRunner(self._target))
         self._last_end: int | None = None
         self._fence = None  # lazy: driver-side only, never shipped state
         self._floor_persisted = 0
@@ -424,51 +369,15 @@ class OutboxStreamReader(_ReaderCommon, DataSourceStreamReader):
         else:
             capped = true_max
         if self._txn_aligned and capped > (self._last_end or 0):
-            base = self._last_end or 0
-            aligned = self._txn_boundary(base, capped)
-            if aligned <= base and true_max > capped:
-                # one transaction larger than the rate cap: atomicity
-                # wins — report the SMALLEST boundary past the base
-                # within the fence (the logical DataSource's stance)
-                aligned = self._txn_boundary(base, true_max,
-                                             smallest=True)
-            capped = max(aligned, base)
+            from .outbox_pg import PsqlRunner, txn_ceiling
+
+            capped = txn_ceiling(PsqlRunner(self._target),
+                                 self._last_end or 0, capped, true_max)
         self._last_end = max(capped, self._last_end or 0)
         if (self._backend == "postgres"
                 and self._last_end > self._floor_persisted):
             self._persist_floor(self._last_end)
         return {"seq": self._last_end}
-
-    def _txn_boundary(self, base: int, cap: int,
-                      smallest: bool = False) -> int:
-        """Largest (or smallest, for the oversized-txn escape) seq B in
-        (base, cap] such that NO transaction has rows on both sides of
-        B — one window query over the fenced range: per-xid max seq
-        (NULL xids are their own one-row groups: no txn identity,
-        nothing to tear), running max by seq, boundary where the
-        running reach equals the row's own seq. Every candidate is
-        <= the fence, so all its rows are final; rows of a straddling
-        committed txn above the fence are visible to this read and
-        push the reach past the boundary — exactly the tear the pullback
-        prevents."""
-        from .outbox_pg import OUTBOX_TABLE, PsqlRunner
-
-        runner = PsqlRunner(self._target)
-        agg = "MIN" if smallest else "MAX"
-        got = runner.scalar(
-            "WITH win AS (SELECT seq, xid "
-            f"FROM {OUTBOX_TABLE} WHERE seq > {int(base)} "
-            f"AND seq <= {int(cap)}), "
-            "ext AS (SELECT x.xid, MAX(o.seq) AS mx "
-            "FROM (SELECT DISTINCT xid FROM win WHERE xid IS NOT NULL) x "
-            f"JOIN {OUTBOX_TABLE} o ON o.xid = x.xid GROUP BY x.xid), "
-            "r AS (SELECT win.seq, MAX(COALESCE(ext.mx, win.seq)) "
-            "OVER (ORDER BY win.seq) AS reach "
-            "FROM win LEFT JOIN ext ON win.xid = ext.xid) "
-            f"SELECT COALESCE({agg}(seq), {int(base)}) FROM r "
-            "WHERE reach = seq"
-        )
-        return int(got or base)
 
     def _persist_floor(self, seq: int) -> None:
         runner, table, _key, floor_key = self._runner()

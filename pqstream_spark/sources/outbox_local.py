@@ -78,6 +78,28 @@ OUTBOX_BATCH_SCHEMA = T.StructType(
 )
 
 
+def outbox_rows(conn, lo: int, hi: int) -> list[tuple]:
+    """The outbox rows with lo < seq <= hi in seq order, as
+    OUTBOX_BATCH_SCHEMA tuples — the one range read of the sqlite
+    outbox, shared by LocalOutboxPoller and the pqstream_outbox
+    DataSource partitions."""
+    from datetime import datetime
+
+    cur = conn.execute(
+        f"SELECT seq, ts, schema_name, table_name, op, id, "
+        f"payload, previous FROM {LOCAL_OUTBOX_TABLE} "
+        f"WHERE seq > ? AND seq <= ? ORDER BY seq",
+        (lo, hi),
+    )
+    return [
+        (int(seq),
+         datetime.fromisoformat(ts.replace("Z", "+00:00")).replace(tzinfo=None),
+         schema_name, table_name, op, id_, payload, previous)
+        for seq, ts, schema_name, table_name, op, id_, payload, previous
+        in cur.fetchall()
+    ]
+
+
 def _json_object(cols: list[str], rowref: str) -> str:
     pairs = ", ".join(f"'{c}', {rowref}.\"{c}\"" for c in cols)
     return f"json_object({pairs})"
@@ -311,30 +333,8 @@ class LocalOutboxPoller:
         )
 
     def read_batch(self, spark: SparkSession) -> DataFrame:
-        lo, hi = self.last_seq, self.last_seq + self.max_rows
-        cur = self.conn.execute(
-            f"SELECT seq, ts, schema_name, table_name, op, id, "
-            f"payload, previous FROM {LOCAL_OUTBOX_TABLE} "
-            f"WHERE seq > ? AND seq <= ? ORDER BY seq",
-            (lo, hi),
-        )
-        from datetime import datetime
-
-        rows = [
-            (
-                int(seq),
-                datetime.fromisoformat(ts.replace("Z", "+00:00")).replace(
-                    tzinfo=None
-                ),
-                schema_name,
-                table_name,
-                op,
-                id_,
-                payload,
-                previous,
-            )
-            for seq, ts, schema_name, table_name, op, id_, payload, previous in cur.fetchall()
-        ]
+        rows = outbox_rows(self.conn, self.last_seq,
+                           self.last_seq + self.max_rows)
         self._pending_hi = rows[-1][0] if rows else None
         return spark.createDataFrame(rows, OUTBOX_BATCH_SCHEMA)
 

@@ -105,10 +105,13 @@ class PsqlRunner:
 
     conninfo: str
 
-    def sql(self, script: str, *, check: bool = True) -> str:
+    def _psql(self, opts: list[str], script: str | None = None,
+              check: bool = True) -> str:
+        """The one psql invocation: no psqlrc, quiet, ON_ERROR_STOP,
+        the _NULL marker, cwd /tmp; a failure raises PsqlError."""
         proc = subprocess.run(
-            ["psql", self.conninfo, "-X", "-q",
-             "-v", "ON_ERROR_STOP=1", "-P", f"null={_NULL}"],
+            ["psql", self.conninfo, "-X", "-q", "-v", "ON_ERROR_STOP=1",
+             "-P", f"null={_NULL}", *opts],
             input=script, capture_output=True, text=True, cwd="/tmp",
         )
         if check and proc.returncode != 0:
@@ -116,6 +119,9 @@ class PsqlRunner:
                 f"psql failed (rc={proc.returncode}): {proc.stderr.strip()}"
             )
         return proc.stdout
+
+    def sql(self, script: str, *, check: bool = True) -> str:
+        return self._psql([], script, check=check)
 
     def query_csv(
         self, query: str, pre_statements: tuple[str, ...] = ()
@@ -126,19 +132,10 @@ class PsqlRunner:
         spawn) and must produce no result rows (SET/DO) so stdout stays
         a single CSV block — the logical poller's flush barrier rides
         this."""
-        cmd = ["psql", self.conninfo, "-X", "-q", "-v", "ON_ERROR_STOP=1",
-               "--csv", "-P", f"null={_NULL}"]
-        for s in pre_statements:
-            cmd += ["-c", s]
-        cmd += ["-c", query]
-        proc = subprocess.run(
-            cmd, capture_output=True, text=True, cwd="/tmp",
-        )
-        if proc.returncode != 0:
-            raise PsqlError(
-                f"psql query failed (rc={proc.returncode}): {proc.stderr.strip()}"
-            )
-        rows = list(csv.reader(io.StringIO(proc.stdout)))
+        opts = ["--csv"]
+        for s in (*pre_statements, query):
+            opts += ["-c", s]
+        rows = list(csv.reader(io.StringIO(self._psql(opts))))
         if not rows:
             return []
         header, data = rows[0], rows[1:]
@@ -149,9 +146,7 @@ class PsqlRunner:
 
     def scalar(self, query: str) -> str | None:
         rows = self.query_csv(query)
-        if not rows:
-            return None
-        return next(iter(rows[0].values()))
+        return next(iter(rows[0].values())) if rows else None
 
     def query_lines(self, *stmts: str) -> list[str]:
         """Multiple single-value SELECTs in ONE psql invocation, strictly
@@ -159,21 +154,14 @@ class PsqlRunner:
         only, unaligned). This is the ordered-scalar transport PgSeqFence
         rounds ride on (ADVICE r8: keep the psql contract — ON_ERROR_STOP,
         cwd, null marker, error wrapping — single-homed on this class)."""
-        cmd = ["psql", self.conninfo, "-X", "-q", "-t", "-A",
-               "-v", "ON_ERROR_STOP=1", "-P", f"null={_NULL}"]
+        opts = ["-t", "-A"]
         for s in stmts:
-            cmd += ["-c", s]
-        proc = subprocess.run(cmd, capture_output=True, text=True, cwd="/tmp")
-        if proc.returncode != 0:
-            raise PsqlError(
-                f"psql query failed (rc={proc.returncode}): "
-                f"{proc.stderr.strip()}"
-            )
-        lines = [l for l in proc.stdout.splitlines() if l.strip()]
+            opts += ["-c", s]
+        out = self._psql(opts)
+        lines = [l for l in out.splitlines() if l.strip()]
         if len(lines) != len(stmts):
             raise PsqlError(
-                f"query_lines: expected {len(stmts)} lines, got "
-                f"{proc.stdout!r}"
+                f"query_lines: expected {len(stmts)} lines, got {out!r}"
             )
         return lines
 
@@ -384,6 +372,100 @@ def _parse_pg_ts(ts: str) -> datetime:
     return dt
 
 
+def outbox_rows(runner: PsqlRunner, lo: int, hi: int) -> list[tuple]:
+    """The outbox rows with lo < seq <= hi in seq order, as
+    OUTBOX_BATCH_SCHEMA tuples — the one range read of the Postgres
+    outbox. The serial poll runs it on the driver; each --parallel-read
+    task and each pqstream_outbox partition runs it on an executor
+    (`runner` then carries only the conninfo there)."""
+    rows = runner.query_csv(
+        f"SELECT seq, ts, schema_name, table_name, op, id, "
+        f"payload::text AS payload_json, previous::text AS previous_json "
+        f"FROM {OUTBOX_TABLE} WHERE seq > {int(lo)} AND seq <= {int(hi)} "
+        f"ORDER BY seq"
+    )
+    return [
+        (int(r["seq"]), _parse_pg_ts(r["ts"]), r["schema_name"],
+         r["table_name"], r["op"], r["id"], r["payload_json"],
+         r["previous_json"])
+        for r in rows
+    ]
+
+
+def ensure_xid_index(runner: PsqlRunner) -> None:
+    """Index on the envelope xid, which txn_ceiling's per-xid extent
+    lookups probe. OPT-IN (plain consumers never pay its write
+    amplification) and created at CONSTRUCTION time, never inside a
+    poll: CREATE INDEX takes a lock that queues behind open writers, so
+    a mid-poll creation would wedge the poll loop exactly when
+    transactions are in flight. Without it the same lookups run as one
+    hash-join scan per poll — correct either way."""
+    runner.sql(
+        f"CREATE INDEX IF NOT EXISTS {OUTBOX_TABLE}_xid_idx "
+        f"ON {OUTBOX_TABLE} (xid);"
+    )
+
+
+def _txn_boundaries(runner: PsqlRunner, base: int, cap: int,
+                    agg: str) -> tuple[int, int]:
+    """(`agg` — MAX or MIN — of the transaction boundaries in
+    (base, cap], or base when there is none; the furthest seq any
+    window row's transaction reaches, or base on an empty window).
+
+    A boundary is a row seq B such that no transaction has rows on both
+    sides of B. One window query: per-xid max seq over the xids present
+    in the window (NULL xids are their own one-row groups: no txn
+    identity, nothing to tear), running max of it by seq, boundary
+    where the running reach equals the row's own seq. Every window row
+    is at or below the fence, so its writer has finished and all the
+    transaction's rows are visible — rows of a straddling transaction
+    above `cap` push the reach past the boundary, exactly the tear the
+    rule prevents."""
+    got = runner.query_csv(
+        "WITH win AS (SELECT seq, xid "
+        f"FROM {OUTBOX_TABLE} WHERE seq > {int(base)} "
+        f"AND seq <= {int(cap)}), "
+        "ext AS (SELECT x.xid, MAX(o.seq) AS mx "
+        "FROM (SELECT DISTINCT xid FROM win WHERE xid IS NOT NULL) x "
+        f"JOIN {OUTBOX_TABLE} o ON o.xid = x.xid GROUP BY x.xid), "
+        "r AS (SELECT win.seq, MAX(COALESCE(ext.mx, win.seq)) "
+        "OVER (ORDER BY win.seq) AS reach "
+        "FROM win LEFT JOIN ext ON win.xid = ext.xid) "
+        f"SELECT COALESCE({agg}(seq) FILTER (WHERE reach = seq), "
+        f"{int(base)}) AS boundary, "
+        f"COALESCE(MAX(reach), {int(base)}) AS reach FROM r"
+    )[0]
+    return int(got["boundary"]), int(got["reach"])
+
+
+def txn_ceiling(runner: PsqlRunner, base: int, cap: int, fence: int) -> int:
+    """The transaction-boundary rule: pull the fenced, rate-capped
+    ceiling `cap` of a read over (base, cap] back so no writer
+    transaction has rows on both sides of it. A reader that takes
+    exactly (base, ceiling] — the Structured Streaming source contract
+    — then gets every transaction whole in one batch. The
+    pqstream_outbox DataSource (`txnAligned`) and the daemon's
+    `--txn-consistent` poller both apply it; it needs the writer xid
+    only, so the serial and the partitioned read share it.
+
+    - No transaction crosses `cap` (an empty window, or only abort
+      gaps above the last row): `cap` itself, so gaps are passed as the
+      plain read passes them.
+    - Otherwise the largest boundary in (base, cap].
+    - No boundary there and `fence` lies past `cap` (one transaction
+      larger than the rate cap): the smallest boundary in
+      (base, fence] — atomicity beats max_rows.
+    - Otherwise `base`: the straddling transaction waits for a later
+      fence. A self-contained transaction inside its seq span waits
+      with it and is emitted in the same batch."""
+    largest, reach = _txn_boundaries(runner, base, cap, "MAX")
+    if reach <= cap:
+        return cap
+    if largest > base or fence <= cap:
+        return largest
+    return _txn_boundaries(runner, base, fence, "MIN")[0]
+
+
 OUTBOX_SEQ_SEQUENCE = f"{OUTBOX_TABLE}_seq_seq"
 
 
@@ -558,28 +640,40 @@ class PgOutboxPoller:
     so at-least-once holds under arbitrarily many interleaved writers,
     not just the serial case. `fence_wait` bounds how long a poll waits
     for in-flight transactions to drain before settling for the current
-    safe ceiling."""
+    safe ceiling.
+
+    `txn_consistent` (`--txn-consistent`): the ceiling is further
+    pulled back to a transaction boundary (txn_ceiling), so every batch
+    — serial or partitioned — holds each writer transaction whole. The
+    durable offset is the batch ceiling as usual: nothing is held back
+    between polls, so a crash replays at most the in-flight batch."""
 
     runner: PsqlRunner
     max_rows: int = 100_000
     last_seq: int = 0
     consumer: str | None = None
     fence_wait: float = 2.0
+    txn_consistent: bool = False
     _pending_hi: int | None = field(default=None, repr=False)
     _fence: "PgSeqFence | None" = field(default=None, repr=False)
 
     def _safe_hi(self) -> int:
-        """Fenced upper bound for the next batch: at most max_rows past
-        last_seq, never past the finality fence."""
+        """Upper bound for the next batch: at most max_rows past
+        last_seq, never past the finality fence, and on a transaction
+        boundary when txn_consistent."""
         if self._fence is None:
             self._fence = PgSeqFence(self.runner)
         safe = self._fence.safe_seq(wait=self.fence_wait)
-        return min(self.last_seq + self.max_rows, max(safe, self.last_seq))
+        hi = min(self.last_seq + self.max_rows, max(safe, self.last_seq))
+        if self.txn_consistent and hi > self.last_seq:
+            hi = txn_ceiling(self.runner, self.last_seq, hi, safe)
+        return hi
 
     @classmethod
     def open_durable(
         cls, runner: PsqlRunner, consumer: str = "daemon",
         max_rows: int = 100_000, fence_wait: float = 2.0,
+        txn_consistent: bool = False,
     ) -> "PgOutboxPoller":
         runner.sql(
             f"CREATE TABLE IF NOT EXISTS {PG_OFFSET_TABLE} ("
@@ -597,8 +691,11 @@ class PgOutboxPoller:
             f"SELECT last_seq FROM {PG_OFFSET_TABLE} "
             f"WHERE consumer = {_quote_lit(consumer)}"
         )
+        if txn_consistent:
+            ensure_xid_index(runner)
         return cls(runner, max_rows=max_rows, last_seq=int(last or 0),
-                   consumer=consumer, fence_wait=fence_wait)
+                   consumer=consumer, fence_wait=fence_wait,
+                   txn_consistent=txn_consistent)
 
     def read_batch(self, spark):
         lo = self.last_seq
@@ -606,124 +703,28 @@ class PgOutboxPoller:
         if hi <= lo:
             self._pending_hi = None
             return spark.createDataFrame([], OUTBOX_BATCH_SCHEMA)
-        rows = self.runner.query_csv(
-            f"SELECT seq, ts, schema_name, table_name, op, id, "
-            f"payload::text AS payload_json, previous::text AS previous_json "
-            f"FROM {OUTBOX_TABLE} WHERE seq > {int(lo)} AND seq <= {int(hi)} "
-            f"ORDER BY seq"
-        )
-        data = [
-            (
-                int(r["seq"]),
-                _parse_pg_ts(r["ts"]),
-                r["schema_name"],
-                r["table_name"],
-                r["op"],
-                r["id"],
-                r["payload_json"],
-                r["previous_json"],
-            )
-            for r in rows
-        ]
+        data = outbox_rows(self.runner, lo, hi)
         # advance to the FENCE, not the max row read: every seq <= hi is
         # final, so gaps below it are aborted transactions — passing
         # them is safe and avoids re-scanning abort gaps forever
         self._pending_hi = hi
         return spark.createDataFrame(data, OUTBOX_BATCH_SCHEMA)
 
-    def ensure_xid_index(self) -> None:
-        """Index on the envelope xid — OPT-IN (plain consumers never
-        pay its write amplification) and created at CONSTRUCTION time,
-        never inside a poll: CREATE INDEX takes a lock that queues
-        behind open writers, so a mid-poll creation would wedge the
-        poll loop exactly when transactions are in flight (review
-        finding — the first lazy-in-read version deadlocked the
-        --txn-consistent daemon against its own test writers). With
-        it, read_batch_txn's and the DataSource's per-xid extent
-        lookups are index probes bounded by the window's xids; without
-        it the same queries run as one hash-join scan per poll —
-        correct either way."""
-        self.runner.sql(
-            f"CREATE INDEX IF NOT EXISTS {OUTBOX_TABLE}_xid_idx "
-            f"ON {OUTBOX_TABLE} (xid);"
-        )
-
-    def read_batch_txn(self, spark):
-        """read_batch plus the writer's `xid` column AND a per-row
-        `txn_complete` flag (round 10 — the exact-completion signal for
-        TxnAssembler): txn_complete is true iff the xid has NO visible
-        rows above this batch's fence ceiling. Soundness: every row in
-        the batch sits at or below the fence, so its writer has
-        FINISHED (the fence's own proof) and ALL the transaction's rows
-        are already visible — the per-xid MAX(seq) over an UNBOUNDED
-        window above `lo` is the transaction's true extent, computed
-        server-side by one window function. Same fenced
-        (last_seq, safe_hi] window, same advance() contract.
-
-        Why a flag instead of round 9's one-batch holdback: the
-        holdback's 'batch N+1 completes batch N's xids' claim breaks
-        when the next fence round cannot advance (an open writer pins
-        the ceiling — the next 'batch' is an empty window and flushing
-        on it tears the buffered transaction) and when the max_rows
-        rate cap moves the ceiling to less than the proven candidate
-        (the tail of a wide transaction sits beyond the cap). The
-        completion flag is immune to both: an xid emits exactly when
-        its last row is delivered."""
-        from pyspark.sql import types as T
-
-        lo = self.last_seq
-        hi = self._safe_hi()
-        schema = T.StructType(
-            OUTBOX_BATCH_SCHEMA.fields
-            + [T.StructField("xid", T.LongType()),
-               T.StructField("txn_complete", T.BooleanType())]
-        )
-        if hi <= lo:
-            self._pending_hi = None
-            return spark.createDataFrame([], schema)
-        # per-xid extents computed only for xids PRESENT in the window
-        # — an index probe per distinct xid when ensure_xid_index ran,
-        # one hash-join scan otherwise; never the naive unbounded-
-        # window MAX OVER, which re-scanned the whole backlog above hi
-        # every poll — O(backlog) per poll, O(n²) drains (review fix)
-        rows = self.runner.query_csv(
-            "WITH win AS (SELECT seq, ts, schema_name, table_name, op, id, "
-            "payload::text AS payload_json, previous::text AS previous_json, "
-            f"xid FROM {OUTBOX_TABLE} "
-            f"WHERE seq > {int(lo)} AND seq <= {int(hi)}), "
-            "ext AS (SELECT x.xid, MAX(o.seq) AS txn_max "
-            "FROM (SELECT DISTINCT xid FROM win WHERE xid IS NOT NULL) x "
-            f"JOIN {OUTBOX_TABLE} o ON o.xid = x.xid GROUP BY x.xid) "
-            "SELECT win.seq, win.ts, win.schema_name, win.table_name, "
-            "win.op, win.id, win.payload_json, win.previous_json, win.xid, "
-            f"COALESCE(ext.txn_max <= {int(hi)}, true)::text AS txn_complete "
-            "FROM win LEFT JOIN ext ON win.xid = ext.xid ORDER BY win.seq"
-        )
-        data = [
-            (
-                int(r["seq"]), _parse_pg_ts(r["ts"]), r["schema_name"],
-                r["table_name"], r["op"], r["id"], r["payload_json"],
-                r["previous_json"],
-                int(r["xid"]) if r["xid"] is not None else None,
-                r["txn_complete"] == "true",
-            )
-            for r in rows
-        ]
-        self._pending_hi = hi
-        return spark.createDataFrame(data, schema)
-
     def read_batch_distributed(self, spark, num_partitions: int = 8):
-        """Same fenced batch contract, but the rows flow through
-        `pg_read_outbox_distributed` — N psql sub-range reads on
-        executors, zero driver materialization. The fence gives the
-        batch a STABLE upper bound: every seq <= it is final, so the
-        lazy executor read (which runs later than this planning call)
-        sees exactly the planned row set — a row committing in between
-        necessarily lands above the fence and waits for the next poll,
-        which keeps the seq-named sink's replay idempotent. Sub-ranges
-        are planned from row quantiles (pg_plan_balanced_bounds), so a
-        sparse post-compaction seq space still spreads evenly across
-        the N readers instead of degrading to serial."""
+        """Same fenced batch contract, but the rows are read on the
+        executors, never the driver: one `mapInPandas` task per
+        sub-range, each running outbox_rows over its own psql session.
+        The fence gives the batch a STABLE upper bound: every seq <= it
+        is final, so the lazy executor read (which runs later than this
+        planning call) sees exactly the planned row set — a row
+        committing in between necessarily lands above the fence and
+        waits for the next poll, which keeps the seq-named sink's
+        replay idempotent. Sub-ranges are planned from row quantiles
+        (pg_plan_balanced_bounds), so a sparse post-compaction seq
+        space still spreads evenly across the N readers instead of
+        degrading to serial. Each task opens its own session, so size
+        N to the server's connection budget; on a real cluster the
+        executors need `psql` and a conninfo they can reach."""
         lo = self.last_seq
         hi = self._safe_hi()
         if hi <= lo:
@@ -731,9 +732,26 @@ class PgOutboxPoller:
             return spark.createDataFrame([], OUTBOX_BATCH_SCHEMA)
         bounds = pg_plan_balanced_bounds(self.runner, lo, hi, num_partitions)
         self._pending_hi = hi
-        return pg_read_outbox_distributed(
-            spark, self.runner.conninfo, lo, hi, num_partitions,
-            bounds=bounds,
+        if not bounds:  # only abort gaps below the fence
+            return spark.createDataFrame([], OUTBOX_BATCH_SCHEMA)
+        conninfo = self.runner.conninfo
+        columns = OUTBOX_BATCH_SCHEMA.fieldNames()
+
+        def read_ranges(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                for range_lo, range_hi in pdf.itertuples(index=False):
+                    rows = outbox_rows(PsqlRunner(conninfo), range_lo,
+                                       range_hi)
+                    if rows:
+                        yield pd.DataFrame.from_records(rows,
+                                                        columns=columns)
+
+        return (
+            spark.createDataFrame(bounds, "range_lo LONG, range_hi LONG")
+            .repartition(len(bounds))
+            .mapInPandas(read_ranges, OUTBOX_BATCH_SCHEMA)
         )
 
     def _persist(self) -> None:
@@ -751,32 +769,6 @@ class PgOutboxPoller:
             self._pending_hi = None
             self._persist()
         return self.last_seq
-
-    def advance_read(self) -> int:
-        """advance() for the IN-MEMORY read cursor only — the durable
-        offset row is written separately via persist_at. The
-        --txn-consistent daemon uses this pair: reads progress batch by
-        batch while the persisted offset trails ONE batch (the
-        TxnAssembler holdback window), so a crash replays — never
-        loses — rows the assembler was still holding; replayed
-        complete transactions are absorbed by the seq-keyed idempotent
-        sink, and a fresh assembler re-groups the replayed window."""
-        if self._pending_hi is not None:
-            self.last_seq = self._pending_hi
-            self._pending_hi = None
-        return self.last_seq
-
-    def persist_at(self, seq: int) -> None:
-        """Write the durable offset row at an explicit position behind
-        the read cursor (see advance_read). Monotone guard: a stale
-        trailing value must never regress the stored offset."""
-        if self.consumer is not None:
-            self.runner.sql(
-                f"INSERT INTO {PG_OFFSET_TABLE} (consumer, last_seq) "
-                f"VALUES ({_quote_lit(self.consumer)}, {int(seq)}) "
-                "ON CONFLICT (consumer) DO UPDATE SET last_seq = "
-                f"GREATEST({PG_OFFSET_TABLE}.last_seq, excluded.last_seq);"
-            )
 
     def rewind(self, seq: int) -> int:
         self.last_seq = int(seq)
@@ -803,92 +795,6 @@ class PgOutboxPoller:
             f"WHERE seq <= {int(low)} RETURNING 1) SELECT count(*) FROM d"
         )
         return int(n or 0)
-
-
-class TxnAssembler:
-    """Transaction-consistent consumption over fenced batches: a
-    multi-row transaction whose seqs straddle a fenced batch ceiling is
-    split across micro-batches — loss-free and in-order, but a
-    downstream materialization folding each batch independently can
-    expose a torn intermediate state. With the writer's xid and the
-    per-row `txn_complete` flag (read_batch_txn), this assembler
-    re-groups rows into whole transactions with EXACT completion
-    (round 10; supersedes round 9's one-batch holdback, whose
-    'the next batch completes everything buffered' rule tore a
-    buffered transaction whenever the next fence round could not
-    advance — an open writer pinning the ceiling made the next window
-    empty and the flush-on-empty emitted a prefix — or whenever the
-    max_rows rate cap moved the ceiling short of the proven
-    candidate).
-
-    Rule: an xid emits exactly when a row of it arrives flagged
-    txn_complete (= the batch ceiling covers the transaction's true
-    MAX(seq), which read_batch_txn computes over an unbounded window —
-    sound because any xid with a row under the fence has finished, so
-    all its rows are visible to that read). Until then its rows buffer.
-    Self-contained transactions (the common case) therefore emit in
-    the SAME batch they arrive in — no added latency. NULL xids
-    (pre-migration rows, sqlite) emit immediately: no transaction
-    identity, nothing to wait for. An empty window emits nothing and
-    buffers nothing — never a flush-by-assumption.
-
-    Pure DataFrame ops (distinct + semi/anti join on the bounded
-    buffer, no driver collect in feed); the buffer is
-    localCheckpoint'ed so lineage does not grow across polls. Emission
-    preserves seq order within the union's partitions; consumers that
-    need global order sort by seq as usual. `pending_floor()` (one
-    1-row aggregate on the tiny buffer) tells a durability manager the
-    lowest seq still held back — the --txn-consistent daemon persists
-    its offset below it so a crash REPLAYS the holdback instead of
-    losing it."""
-
-    def __init__(self) -> None:
-        self._buffer = None  # rows (without txn_complete) of open xids
-
-    def feed(self, batch_df):
-        """One read_batch_txn batch in → the now-complete transactions
-        out (without the txn_complete column; xid kept)."""
-        from pyspark.sql import functions as F
-
-        null_xid = batch_df.where(F.col("xid").isNull()).drop("txn_complete")
-        batch = batch_df.where(F.col("xid").isNotNull())
-        complete = (batch.where(F.col("txn_complete"))
-                    .select("xid").distinct())
-        ready = batch.join(
-            F.broadcast(complete), "xid", "left_semi").drop("txn_complete")
-        held = batch.join(
-            F.broadcast(complete), "xid", "left_anti").drop("txn_complete")
-        if self._buffer is None:
-            emit = ready
-            self._buffer = held.localCheckpoint(eager=True)
-        else:
-            emit = ready.unionByName(
-                self._buffer.join(F.broadcast(complete), "xid", "left_semi")
-            )
-            self._buffer = (
-                self._buffer.join(F.broadcast(complete), "xid", "left_anti")
-                .unionByName(held)
-                .localCheckpoint(eager=True)
-            )
-        return emit.unionByName(null_xid)
-
-    def pending_floor(self):
-        """Lowest seq still buffered (None when nothing is held) — the
-        durable-offset ceiling for a crash-replayable consumer."""
-        from pyspark.sql import functions as F
-
-        if self._buffer is None:
-            return None
-        row = self._buffer.agg(F.min("seq")).first()
-        return row[0]
-
-    def flush(self):
-        """Terminal drain: hand back whatever is still buffered (the
-        caller decided the stream is over; incomplete transactions are
-        possible here by definition — prefer letting the durable offset
-        trail pending_floor() and replaying on the next run)."""
-        out, self._buffer = self._buffer, None
-        return out
 
 
 def _quote_lit(s: str) -> str:
@@ -1191,109 +1097,3 @@ class PgNotifyCaptureManager:
                 ";\n".join(remove_notify_trigger_sql(t) for t in tables) + ";"
             )
         return tables
-
-
-def pg_read_outbox_distributed(
-    spark,
-    conninfo: str,
-    lo: int,
-    hi: int,
-    num_partitions: int = 8,
-    bounds: list[tuple[int, int]] | None = None,
-):
-    """EXECUTOR-SIDE partitioned outbox read — the scale path the
-    driver-side poller caps out of (`tools/bench_pg.py` measured the
-    single-psql CSV drain at ~5.4k rows/s; this fans the same
-    transport out across the cluster the way a partitioned JDBC read
-    would, without needing a JDBC jar).
-
-    The seq range (lo, hi] splits into `num_partitions` contiguous
-    sub-ranges; each becomes one input row of a range frame, and
-    `mapInPandas` runs ONE `psql --csv` subprocess per sub-range ON
-    ITS EXECUTOR, parsing rows straight into Arrow batches — bytes
-    never pass through the driver. Requirements and caveats:
-
-    - `psql` must exist on every executor host and `conninfo` must be
-      reachable from them (on local[k] both hold trivially; on a real
-      cluster this means TCP conninfo + client binaries).
-    - seq is a monotonically-assigned BIGSERIAL, so contiguous ranges
-      partition the table with no overlap and no misses; per-range
-      `ORDER BY seq` keeps each partition internally ordered (global
-      order across partitions is a downstream sort, as with any
-      distributed read).
-    - N concurrent psql sessions hit the server; size num_partitions
-      to the server's connection budget, not the cluster's core count.
-
-    `bounds`: explicit contiguous (range_lo, range_hi] sub-ranges
-    (e.g. row-balanced quantile splits from pg_plan_balanced_bounds);
-    default is equal seq-value slices of (lo, hi].
-
-    Returns a DataFrame with OUTBOX_BATCH_SCHEMA. Result is
-    row-identical to PgOutboxPoller.read_batch over the same range
-    (pinned by test)."""
-    if hi <= lo:
-        return spark.createDataFrame([], OUTBOX_BATCH_SCHEMA)
-    if bounds is None:
-        num_partitions = max(1, int(num_partitions))
-        span = hi - lo
-        step = (span + num_partitions - 1) // num_partitions
-        bounds = [
-            (lo + i * step, min(lo + (i + 1) * step, hi))
-            for i in range(num_partitions)
-            if lo + i * step < hi
-        ]
-    if not bounds:
-        return spark.createDataFrame([], OUTBOX_BATCH_SCHEMA)
-    bounds_df = spark.createDataFrame(
-        bounds, "range_lo LONG, range_hi LONG"
-    ).repartition(len(bounds))
-
-    def read_ranges(batches):
-        import csv as _csv
-        import io as _io
-        import subprocess as _sp
-
-        import pandas as _pd
-
-        for pdf in batches:
-            for row_lo, row_hi in pdf.itertuples(index=False):
-                proc = _sp.run(
-                    ["psql", conninfo, "-X", "-q", "-v", "ON_ERROR_STOP=1",
-                     "--csv", "-P", f"null={_NULL}", "-c",
-                     f"SELECT seq, ts, schema_name, table_name, op, id, "
-                     f"payload::text AS payload_json, "
-                     f"previous::text AS previous_json "
-                     f"FROM {OUTBOX_TABLE} "
-                     f"WHERE seq > {int(row_lo)} AND seq <= {int(row_hi)} "
-                     f"ORDER BY seq"],
-                    capture_output=True, text=True, cwd="/tmp",
-                )
-                if proc.returncode != 0:
-                    raise PsqlError(
-                        f"distributed outbox read failed for range "
-                        f"({row_lo}, {row_hi}]: {proc.stderr.strip()}"
-                    )
-                rows = list(_csv.reader(_io.StringIO(proc.stdout)))
-                if len(rows) <= 1:
-                    continue
-                header, data = rows[0], rows[1:]
-                cols = {
-                    k: [(None if v == _NULL else v) for v in vs]
-                    for k, vs in zip(header, zip(*data))
-                }
-                out = _pd.DataFrame({
-                    "seq": _pd.Series(cols["seq"], dtype="int64"),
-                    "ts": _pd.Series(
-                        [_parse_pg_ts(t) for t in cols["ts"]],
-                        dtype="datetime64[us]",
-                    ),
-                    "schema_name": cols["schema_name"],
-                    "table_name": cols["table_name"],
-                    "op": cols["op"],
-                    "id": cols["id"],
-                    "payload_json": cols["payload_json"],
-                    "previous_json": cols["previous_json"],
-                })
-                yield out
-
-    return bounds_df.mapInPandas(read_ranges, OUTBOX_BATCH_SCHEMA)

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
+import os
+import signal
 import sys
+import threading
 from pathlib import Path
 
 import pytest
@@ -10,6 +13,81 @@ sys.path.insert(0, str(REPO_ROOT))
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
+
+# The heaviest modules run last, in this order, each in file order: the
+# live-Postgres transport modules, then the end-to-end and daemon ones.
+# A run killed at its time budget (or stopped by -x) then leaves these
+# unrun instead of a cheap module, and the summary names them.
+RUN_LAST = (
+    "test_outbox_pg.py", "test_outbox_datasource_pg.py",
+    "test_notify_pg.py", "test_logical_pg.py", "test_pgoutput_pg.py",
+    "test_sharded_pg.py", "test_crash_recovery.py",
+    "test_e2e_pipeline.py", "test_wire_http.py",
+)
+_collected: list = []
+_finished: set[str] = set()
+_sigterm = threading.Event()
+
+
+def pytest_collection_modifyitems(session, config, items):
+    rank = {name: i + 1 for i, name in enumerate(RUN_LAST)}
+    items.sort(key=lambda item: rank.get(item.path.name, 0))  # stable
+
+
+def pytest_collection_finish(session):
+    _collected[:] = session.items  # after -k/-m deselection
+
+
+def _interrupt(signum, frame):
+    raise KeyboardInterrupt("SIGTERM")
+
+
+def _watch_sigterm(wakeup_fd: int) -> None:
+    while signal.SIGTERM not in os.read(wakeup_fd, 64):
+        pass
+    _sigterm.set()
+
+
+def pytest_configure(config):
+    """SIGTERM (what `timeout` sends) raises KeyboardInterrupt, so a
+    killed run still prints pytest's summary and the modules it did
+    not reach. `timeout` signals its whole process group, so the Spark
+    JVM dies at the same moment; and an in-process daemon test swaps in
+    its own SIGTERM handler while `main()` runs. The wakeup fd sees the
+    signal in every case, and the next test report after it is replaced
+    by the interrupt: a kill shows up as "not run", never as a failure
+    the dying JVM caused."""
+    if threading.current_thread() is not threading.main_thread():
+        return
+    signal.signal(signal.SIGTERM, _interrupt)
+    r, w = os.pipe()
+    os.set_blocking(w, False)
+    signal.set_wakeup_fd(w, warn_on_full_buffer=False)
+    threading.Thread(target=_watch_sigterm, args=(r,), daemon=True).start()
+
+
+@pytest.hookimpl(wrapper=True)
+def pytest_runtest_makereport(item, call):
+    report = yield
+    if _sigterm.is_set():
+        raise KeyboardInterrupt("SIGTERM")
+    return report
+
+
+def pytest_runtest_logfinish(nodeid, location):
+    _finished.add(nodeid)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    unrun: dict[str, int] = {}
+    for item in _collected:
+        if item.nodeid not in _finished:
+            module = item.nodeid.split("::")[0]
+            unrun[module] = unrun.get(module, 0) + 1
+    if unrun:
+        terminalreporter.write_sep("=", "modules not run (or not finished)")
+        for module, n in unrun.items():
+            terminalreporter.write_line(f"{module}: {n} tests not run")
 
 
 @pytest.fixture(scope="session")

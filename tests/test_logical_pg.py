@@ -539,7 +539,7 @@ def test_logical_datasource_txn_aligned_batches(pg, spark, tmp_path):
     """Offsets are transaction boundaries: a 3-row transaction lands in
     ONE micro-batch even with maxChangesPerBatch=1 (the peek window
     completes transactions), so consumers never see a torn txn — the
-    property the outbox DataSource cannot offer without TxnAssembler."""
+    property the outbox DataSource offers only with `txnAligned`."""
     from pqstream_spark.sources.logical_datasource import LogicalDataSource
     from pqstream_spark.sources.logical_pg import PgLogicalCaptureManager
     from pqstream_spark.sources.outbox_pg import PsqlRunner

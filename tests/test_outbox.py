@@ -58,54 +58,3 @@ def test_consumer_row_rule_sql_matches_python():
     assert by_sql == {"daemon", "analytics", "boot#bootstrapped",
                       "a#lease#x"}
     assert offset_row_kind("daemon@pq_slot#logicallsn") == "logical"
-
-
-def test_txn_assembler_exact_completion_unit(spark):
-    """Pure-DataFrame unit coverage of the round-10 TxnAssembler (the
-    live-PG tests drive it through read_batch_txn; this pins the
-    assembler's own semantics without a server): an xid emits exactly
-    when a row of it arrives flagged txn_complete; incomplete xids
-    buffer across any number of batches (including empty ones — the
-    round-9 flush-on-empty tore here); NULL xids emit immediately;
-    pending_floor tracks the lowest held seq for the durable offset."""
-    from datetime import datetime
-
-    from pyspark.sql import types as T
-
-    from pqstream_spark.sources.outbox_local import OUTBOX_BATCH_SCHEMA
-    from pqstream_spark.sources.outbox_pg import TxnAssembler
-
-    schema = T.StructType(
-        OUTBOX_BATCH_SCHEMA.fields
-        + [T.StructField("xid", T.LongType()),
-           T.StructField("txn_complete", T.BooleanType())]
-    )
-    ts = datetime(2020, 1, 1)
-
-    def row(seq, xid, complete):
-        return (seq, ts, "public", "notes", "INSERT", str(seq),
-                '{"id":%d}' % seq, None, xid, complete)
-
-    def batch(*rows):
-        return spark.createDataFrame(list(rows), schema)
-
-    asm = TxnAssembler()
-    # batch 1: xid 7 spans past the ceiling (incomplete), xid 8 is
-    # self-contained (emits same-batch), NULL xid emits immediately
-    e1 = asm.feed(batch(row(1, 7, False), row(2, 8, True),
-                        (3, ts, "public", "notes", "INSERT", "3",
-                         '{"id":3}', None, None, None)))
-    assert sorted(r.seq for r in e1.collect()) == [2, 3]
-    assert asm.pending_floor() == 1
-    # empty batch: nothing flushes (the round-9 regression)
-    assert asm.feed(batch()).count() == 0
-    assert asm.pending_floor() == 1
-    # batch 2: xid 7 completes -> buffered row 1 emits with rows 4-5;
-    # xid 9 starts buffering
-    e2 = asm.feed(batch(row(4, 7, True), row(5, 7, True),
-                        row(6, 9, False)))
-    assert sorted(r.seq for r in e2.collect()) == [1, 4, 5]
-    assert asm.pending_floor() == 6
-    # flush hands back the remainder (terminal drain only)
-    assert [r.seq for r in asm.flush().collect()] == [6]
-    assert asm.pending_floor() is None

@@ -395,13 +395,13 @@ def test_daemon_bootstrap_snapshot_then_stream(pg, tmp_path):
 
 
 def test_distributed_read_matches_poller(pg, spark):
-    """pg_read_outbox_distributed — the executor-side fan-out of the
-    psql transport — must be row-identical to the driver-side poller
-    over the same seq range, across uneven partition splits, with
-    NULL `previous` (INSERTs), populated `previous` (UPDATEs), and
-    empty sub-ranges all represented."""
-    from pqstream_spark.sources.outbox_pg import pg_read_outbox_distributed
-
+    """read_batch_distributed — one mapInPandas task per row-balanced
+    sub-range, each running outbox_rows over its own psql session —
+    must be row-identical to the driver-side read_batch over the same
+    fenced window: across uneven splits (5 ranges, and 64 ranges for
+    44 rows), with NULL `previous` (INSERTs) and populated `previous`
+    (UPDATEs), for the whole table and an interior window; an empty
+    window and one past the end of the data read nothing."""
     r = _fresh_db(pg, "t_dist")
     PgCaptureManager(r, table_regexp="notes").install()
     r.sql(
@@ -409,34 +409,29 @@ def test_distributed_read_matches_poller(pg, spark):
         "FROM generate_series(1, 37) g;"
         "UPDATE notes SET note = note || '!' WHERE id % 5 = 0;"
     )
-    p = PgOutboxPoller.open_durable(r, consumer="dist", max_rows=1000)
-    want = p.read_batch(spark)
-    n = want.count()
-    assert n == 37 + 7  # 37 inserts + 7 updates
-
-    got = pg_read_outbox_distributed(
-        spark, r.conninfo, lo=0, hi=n, num_partitions=5
-    )
-    assert got.schema == want.schema
-    assert got.count() == n
-    # exact multiset equality, every column
-    assert want.exceptAll(got).count() == 0
-    assert got.exceptAll(want).count() == 0
-    # update rows carry previous_json, insert rows NULL
-    ups = got.filter("op = 'UPDATE'").collect()
+    n = 37 + 7  # 37 inserts + 7 updates
+    for last_seq, max_rows in ((5, 17), (0, 1000)):
+        want_df = PgOutboxPoller(r, max_rows=max_rows,
+                                 last_seq=last_seq).read_batch(spark)
+        want = sorted(want_df.collect())
+        assert len(want) == min(n - last_seq, max_rows)
+        for parts in (5, 64):
+            got_df = PgOutboxPoller(
+                r, max_rows=max_rows, last_seq=last_seq,
+            ).read_batch_distributed(spark, num_partitions=parts)
+            assert got_df.schema == want_df.schema
+            got = sorted(got_df.collect())  # seqs are unique
+            assert got == want  # every row, every column
+    # the whole-table read: update rows carry previous_json, inserts NULL
+    ups = [row for row in got if row.op == "UPDATE"]
     assert len(ups) == 7 and all(u.previous_json for u in ups)
-    assert got.filter("op = 'INSERT' AND previous_json IS NOT NULL").count() == 0
-    # a sub-range beyond the data and a degenerate range are empty
-    assert pg_read_outbox_distributed(
-        spark, r.conninfo, lo=n, hi=n + 50, num_partitions=3
-    ).count() == 0
-    assert pg_read_outbox_distributed(
-        spark, r.conninfo, lo=5, hi=5, num_partitions=4
-    ).count() == 0
-    # more partitions than rows still covers everything exactly once
-    assert pg_read_outbox_distributed(
-        spark, r.conninfo, lo=0, hi=n, num_partitions=64
-    ).count() == n
+    assert not [row for row in got
+                if row.op == "INSERT" and row.previous_json is not None]
+    # a window past the end of the data and an empty window
+    for last_seq, max_rows in ((n, 50), (5, 0)):
+        p = PgOutboxPoller(r, max_rows=max_rows, last_seq=last_seq)
+        assert p.read_batch_distributed(spark, num_partitions=3).count() == 0
+        assert p.advance() == last_seq
 
 
 def test_poller_distributed_batch_contract(pg, spark):
@@ -1032,22 +1027,20 @@ def test_claim_seq_forces_xid_assignment_before_claim(pg):
 
 
 def test_txn_split_across_polls_reassembled(pg, spark):
-    """Round 9 (VERDICT ask #2): a 3-row transaction whose seqs
-    straddle a fenced batch ceiling is split across two polls — the
-    writer's xid (outbox column, free via the DEFAULT) lets
-    TxnAssembler reassemble it with a one-batch holdback, so a
-    txn-consistent consumer never folds a torn intermediate state.
-    The split setup: A claims seq 1, B claims seq 2 and commits, the
-    poll's fence captures ceiling 2 while A is open, A claims 3-4 and
-    commits, a NEW open writer C (claims 5) blocks the next poll's
-    fresh fence so only the old ceiling 2 drains — A's transaction is
-    delivered as seq 1 in batch 1 and seqs 3-4 in batch 2."""
-    from pqstream_spark.sources.outbox_pg import TxnAssembler
-
+    """A 3-row transaction whose seqs straddle a fenced batch ceiling
+    is never torn: with txn_consistent the poller pulls each fenced
+    ceiling back to a transaction boundary (txn_ceiling). The
+    interleave: A claims seq 1, B claims seq 2 and commits, the first
+    poll's fence captures ceiling 2 while A is open; A claims 3-4 and
+    commits, a NEW open writer C (claims 5) pins the next fresh fence
+    so only ceiling 2 becomes final — and 2 tears A (rows 3-4 sit
+    above it), so that poll emits nothing, B's self-contained row
+    included. Once C commits, one poll emits seqs 1-5 with A whole.
+    An oversized transaction beats max_rows=1 on both read paths."""
     r = _fresh_db(pg, "t_txn_split")
     PgCaptureManager(r, table_regexp="notes").install()
-    p = PgOutboxPoller.open_durable(r, consumer="c", fence_wait=0.0)
-    asm = TxnAssembler()
+    p = PgOutboxPoller.open_durable(r, consumer="c", fence_wait=0.0,
+                                    txn_consistent=True)
 
     a = TxnSession(pg.conninfo("t_txn_split"))
     c = TxnSession(pg.conninfo("t_txn_split"))
@@ -1056,57 +1049,59 @@ def test_txn_split_across_polls_reassembled(pg, spark):
         a.run("INSERT INTO notes VALUES (1, default, 'a1');")   # seq 1
         r.sql("INSERT INTO notes VALUES (2, default, 'b');")    # seq 2, commits
         # poll 1: fence captures ceiling 2, A open -> empty batch
-        assert p.read_batch_txn(spark).count() == 0
+        assert p.read_batch(spark).count() == 0
         p.advance()
         a.run("INSERT INTO notes VALUES (3, default, 'a2');")   # seq 3
         a.run("INSERT INTO notes VALUES (4, default, 'a3');")   # seq 4
         a.run("COMMIT;")
         c.run("BEGIN;")
         c.run("INSERT INTO notes VALUES (5, default, 'c1');")   # seq 5
-        # poll 2: old fence (ceiling 2) drains, fresh fence blocked by C
-        b1 = p.read_batch_txn(spark)
-        rows1 = sorted(b1.collect(), key=lambda x: x.seq)
-        assert [row.seq for row in rows1] == [1, 2], (
-            "setup failed to split the transaction"
-        )
-        # exact completion (round 10): A's row 1 is flagged incomplete
-        # (its txn extends to seq 4, above ceiling 2) while B's
-        # self-contained row 2 is complete and emits IMMEDIATELY
-        assert [row.txn_complete for row in rows1] == [False, True]
-        p.advance()
-        e1 = asm.feed(b1).collect()
-        assert [row.seq for row in e1] == [2], "B must emit same-batch"
-        assert asm.pending_floor() == 1  # A's row 1 held back
-        # round-9 regression, the reason the one-batch holdback died:
-        # an EMPTY window (C pins the fence, ceiling unmoved) must NOT
-        # flush A's partial rows — the old flush-on-empty emitted them
-        b_empty = p.read_batch_txn(spark)
-        assert b_empty.count() == 0
-        assert asm.feed(b_empty).count() == 0, (
-            "empty window tore the buffered transaction")
-        assert asm.pending_floor() == 1
+        # poll 2: the old fence (ceiling 2) drains while C pins the
+        # fresh one, but boundary 2 would tear A -> pulled back to 0
+        assert p.read_batch(spark).count() == 0
+        assert p.advance() == 0
+        assert p._fence.safe_seq() == 2, "setup failed to straddle A"
         c.run("COMMIT;")
-        # poll 3: rest of A's txn (3,4) + C's row (5), all complete now
-        b2 = p.read_batch_txn(spark)
-        assert sorted(row.seq for row in b2.collect()) == [3, 4, 5]
-        p.advance()
-        e2 = asm.feed(b2).collect()
-        # A's transaction emitted WHOLE (1,3,4) together, with C's (5)
-        assert sorted(row.seq for row in e2) == [1, 3, 4, 5]
-        a_xids = {row.xid for row in e2 if row.id in ("1", "3", "4")}
-        assert len(a_xids) == 1, "A's rows must share one xid"
-        assert asm.pending_floor() is None
-        b3 = p.read_batch_txn(spark)
-        assert b3.count() == 0 and asm.feed(b3).count() == 0
-        assert asm.flush().count() == 0
+        # poll 3: A's transaction WHOLE (1,3,4) together with B and C
+        rows = p.read_batch(spark).collect()
+        assert sorted(row.seq for row in rows) == [1, 2, 3, 4, 5]
+        assert p.advance() == 5
+        assert p.read_batch(spark).count() == 0
     finally:
         a.close()
         c.close()
 
+    # oversized transaction vs the rate cap: max_rows=1 caps the
+    # ceiling at seq 2, which would tear the 3-row txn (seqs 2-4); the
+    # smallest-boundary escape reads it in one batch instead
+    for path in ("serial", "distributed"):
+        db = f"t_txn_big_{path}"
+        r2 = _fresh_db(pg, db)
+        PgCaptureManager(r2, table_regexp="notes").install()
+        big = PgOutboxPoller.open_durable(r2, consumer="big", max_rows=1,
+                                          txn_consistent=True)
+
+        def read():
+            if path == "serial":
+                return big.read_batch(spark).collect()
+            return big.read_batch_distributed(spark, 2).collect()
+
+        r2.sql("INSERT INTO notes VALUES (6, default, 'solo');")   # seq 1
+        assert [row.seq for row in read()] == [1]
+        assert big.advance() == 1
+        r2.sql("BEGIN;\n"
+               "INSERT INTO notes VALUES (7, default, 'x');\n"
+               "INSERT INTO notes VALUES (8, default, 'y');\n"
+               "INSERT INTO notes VALUES (9, default, 'z');\n"
+               "COMMIT;")
+        assert sorted(row.seq for row in read()) == [2, 3, 4], (
+            f"{path}: txn atomicity beats the cap")
+        assert big.advance() == 4
+
 
 def test_daemon_txn_consistent_all_or_nothing(pg, tmp_path):
-    """Round 10 (VERDICT r9 #5): `--txn-consistent` wires TxnAssembler
-    into the daemon — a transaction straddling a fenced ceiling (the
+    """`--txn-consistent` pulls each poll's fenced ceiling back to a
+    transaction boundary — a transaction straddling a fenced ceiling (the
     library-test interleave: A claims seq 1, B commits seq 2, poll
     fences at 2 while A is open, A commits 3-4, C pins the next
     ceiling) lands in the jsonl sink ALL-OR-NOTHING: one batch file
@@ -1215,6 +1210,43 @@ def test_daemon_txn_consistent_all_or_nothing(pg, tmp_path):
         a.close()
         c.close()
     assert not t.is_alive()
+
+
+def test_daemon_txn_consistent_parallel_read_once(pg, tmp_path):
+    """`--txn-consistent` composes with `--parallel-read`: the
+    transaction-boundary rule only moves the fenced ceiling, so the
+    partitioned read of (offset, ceiling] holds each transaction whole
+    — a multi-row transaction drained by `--once` lands in one batch
+    file. (A straddled ceiling cannot be staged under `--once`: an
+    open writer blocks the daemon's trigger install.)"""
+    import glob
+
+    r = _fresh_db(pg, "t_txn_par")
+    out = str(tmp_path / "out")
+    log = str(tmp_path / "daemon.log")
+    os.makedirs(out)
+    argv = ["--connect", f"postgres:{pg.conninfo('t_txn_par')}",
+            "--tables", "notes", "--out", out,
+            "--txn-consistent", "--parallel-read", "2"]
+    assert _run_once(argv, log) == 0  # installs capture
+    # the flag reached the poller: its xid index exists
+    assert r.scalar("SELECT count(*) FROM pg_indexes "
+                    "WHERE indexname = 'pqstream_outbox_xid_idx'") == "1"
+    r.sql("INSERT INTO notes VALUES (1, default, 'solo');")
+    r.sql("BEGIN;\n"
+          "INSERT INTO notes VALUES (2, default, 'x');\n"
+          "INSERT INTO notes VALUES (3, default, 'y');\n"
+          "INSERT INTO notes VALUES (4, default, 'z');\n"
+          "COMMIT;")
+    assert _run_once(argv, log) == 0
+    homes = {}
+    for f in glob.glob(out + "/*.jsonl"):
+        with open(f) as fh:
+            for line in fh:
+                if line.strip():
+                    homes[json.loads(line)["payload"]["id"]] = f
+    assert sorted(homes) == [1, 2, 3, 4]
+    assert len({homes[i] for i in (2, 3, 4)}) == 1, homes
 
 
 def test_datasource_txn_aligned_offsets_never_tear(pg, spark):
